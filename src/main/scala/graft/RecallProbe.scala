@@ -59,7 +59,7 @@ object RecallProbe {
       "pq256" -> (() => Similarity.pqTopK(e, k, m = 8, ks = 256,
         rerankFactor = rr.getOrElse(8))),
       "ivfpq" -> (() => Similarity.ivfPqTopK(e, k,
-        rerankFactor = rr.getOrElse(8))),
+        rerankFactor = rr.getOrElse(0))),
       "lsh" -> (() => Similarity.lshTopK(e, k)),
       "quantized" -> (() => Similarity.quantizedTopK(e, k,
         rerankFactor = rr.getOrElse(4))))

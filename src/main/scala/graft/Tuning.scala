@@ -168,7 +168,10 @@ object Tuning {
     * caller's session, so downstream plans are indistinguishable from the
     * old form's output. Storage level is still the size-adaptive
     * [[pinLevel]]. Safe from any thread, including concurrent arms and
-    * per-round loop pins.
+    * per-round loop pins. The clone receives the caller's ANALYZED plan,
+    * never the raw one: the cached clone's catalog is a snapshot from its
+    * creation, so re-resolving a temp view or table name there would read
+    * a stale definition of a view replaced since.
     */
   def pinPartitioned(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -176,9 +179,9 @@ object Tuning {
     val parent = df.sparkSession
     val child = pinSessionFor(parent)
     val pinned = GraftInternals
-      .ofRows(child, GraftInternals.logicalPlan(df))
+      .ofRows(child, df.queryExecution.analyzed)
       .localCheckpoint(true, pinLevel(df))
-    GraftInternals.ofRows(parent, GraftInternals.logicalPlan(pinned))
+    GraftInternals.ofRows(parent, pinned.queryExecution.analyzed)
   }
 
   /** The AQE-off clone used by [[pinPartitioned]], cached per parent

@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *    SparkContext and shared state, COPIED SQLConf), so a conf flip scoped
   *    to one materialization can never race queries planned concurrently on
   *    the caller's session;
-  *  - `Dataset.ofRows(session, plan)` — re-root a logical plan under a
-  *    specific session, used to plan the pin under the clone and hand the
-  *    materialized `LogicalRDD` leaf back to the caller's session.
+  *  - `Dataset.ofRows(session, plan)` — re-root an analyzed logical plan
+  *    under a specific session, used to plan the pin under the clone and
+  *    hand the materialized `LogicalRDD` leaf back to the caller's session.
   *
   * Lives in `org.apache.spark.sql` purely for access; the alternative
   * (runtime reflection) trades a compile-time check for a latent
@@ -24,7 +24,4 @@ object GraftInternals {
 
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
-
-  def logicalPlan(df: DataFrame): LogicalPlan =
-    df.queryExecution.logical
 }

@@ -328,12 +328,18 @@ class GateSpec extends AnyFunSuite {
     assert(clean.getAs[Long]("rows_not_k") === 0L)
     assert(clean.getAs[Long]("dup_pairs") === 0L)
     assert(clean.getAs[Long]("self_matches") === 0L)
-    // duplicate one quantized row inside a cell partition of the delta
+    // folding the delta into the base keeps the store conserved: the gate
+    // counts the live view, and does not append the batch a second time
+    Similarity.compactIvfDeltas(spark, dir)
+    val folded = Similarity.ivfLifecycleInvariants(e, dir).head()
+    assert(folded.getAs[Long]("seg_count_mismatch") === 0L)
+    assert(folded.getAs[Long]("rows_not_k") === 0L)
+    // duplicate one quantized row inside a cell partition of the base
     // segment (the segment is hive-partitioned by cell, so the corruption
     // must land inside a cell=N directory to be discovered) — the
     // conservation counter must notice the segment sum no longer matches
     // the corpus
-    val cellDir = new java.io.File(s"$dir/delta").listFiles()
+    val cellDir = new java.io.File(s"$dir/segments").listFiles()
       .filter(_.getName.startsWith("cell=")).head.getPath
     val src = spark.read.parquet(cellDir)
     val one = src.limit(1).collect().toSeq

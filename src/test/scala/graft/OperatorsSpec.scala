@@ -397,10 +397,10 @@ class OperatorsSpec extends AnyFunSuite {
       val recall = (brute & inMemoryRows.map(t => (t._1, t._2))).size.toDouble / brute.size
       assert(recall >= floor, s"IVF-PQ recall@10 at $sf below floor $floor: $recall")
       val dir = java.nio.file.Files.createTempDirectory("ivfpq-index-spec").toString
-      val summary = Similarity.buildIvfPqIndex(e, dir, iters = 3)
+      val summary = Similarity.buildIvfIndex(e, dir, iters = 3, pq = Some((16, 32)))
         .collect().map(r => r.getAs[Int]("cell") -> r.getAs[Long]("n_vectors"))
       assert(summary.map(_._2).sum === n, "index lost vectors")
-      val fromIndex = Similarity.searchIvfPqIndex(e, dir, k = 10).collect()
+      val fromIndex = Similarity.searchIvfIndex(e, dir, k = 10).collect()
         .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"),
           r.getAs[Int]("rank"))).toSet
       assert(fromIndex === inMemoryRows,
@@ -421,18 +421,18 @@ class OperatorsSpec extends AnyFunSuite {
     val base = e.filter(col("vec_id") % 10 =!= 0)
     val batch = e.filter(col("vec_id") % 10 === 0)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq-append-spec").toString
-    Similarity.buildIvfPqIndex(base, dir, iters = 3).count()
-    val deltaRows = Similarity.appendToIvfPqIndex(batch, dir)
+    Similarity.buildIvfIndex(base, dir, iters = 3, pq = Some((16, 32))).count()
+    val deltaRows = Similarity.appendToIvfIndex(batch, dir)
       .collect().map(_.getAs[Long]("n_vectors")).sum
     assert(deltaRows === batch.count(), "delta segment lost batch rows")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"),
         r.getAs[Int]("rank"))).toSet
-    val before = rows(Similarity.searchIvfPqIndexWithDelta(e, dir, k = 10))
+    val before = rows(Similarity.searchIvfIndex(e, dir, k = 10))
     assert(before.exists(_._2 % 10 == 0),
       "no appended vector ever surfaced as a neighbor")
-    Similarity.compactIvfPqDeltas(spark, dir)
-    val after = rows(Similarity.searchIvfPqIndexWithDelta(e, dir, k = 10))
+    Similarity.compactIvfDeltas(spark, dir)
+    val after = rows(Similarity.searchIvfIndex(e, dir, k = 10))
     assert(after === before, "compaction changed IVF-PQ search results")
     val deltaDirs = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("delta"))
@@ -444,26 +444,26 @@ class OperatorsSpec extends AnyFunSuite {
     val base = e.filter(col("vec_id") % 10 =!= 0)
     val batch = e.filter(col("vec_id") % 10 === 0)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq-autocompact-spec").toString
-    Similarity.buildIvfPqIndex(base, dir, iters = 3).count()
-    Similarity.appendToIvfPqIndex(batch, dir).count()
+    Similarity.buildIvfIndex(base, dir, iters = 3, pq = Some((16, 32))).count()
+    Similarity.appendToIvfIndex(batch, dir).count()
     def deltaDirs() = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("delta")).toSeq
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"),
         r.getAs[Int]("rank"))).toSet
-    val before = rows(Similarity.searchIvfPqIndexWithDelta(e, dir, k = 10))
+    val before = rows(Similarity.searchIvfIndex(e, dir, k = 10))
     // a ~10% delta under a generous 0.9 ratio: the trigger must NOT fire
-    assert(!Similarity.maybeCompactIvfPqDeltas(spark, dir, maxRatio = 0.9),
+    assert(!Similarity.maybeCompactIvfDeltas(spark, dir, maxRatio = 0.9),
       "trigger fired below the ratio")
     assert(deltaDirs().nonEmpty, "no-op trigger deleted the delta")
     // the same delta over a tight 0.01 ratio: fold runs, results identical
-    assert(Similarity.maybeCompactIvfPqDeltas(spark, dir, maxRatio = 0.01),
+    assert(Similarity.maybeCompactIvfDeltas(spark, dir, maxRatio = 0.01),
       "trigger did not fire above the ratio")
     assert(deltaDirs().isEmpty, s"fold left delta dirs: ${deltaDirs()}")
-    val after = rows(Similarity.searchIvfPqIndexWithDelta(e, dir, k = 10))
+    val after = rows(Similarity.searchIvfIndex(e, dir, k = 10))
     assert(after === before, "auto-compaction changed search results")
     // idempotent: nothing left to fold
-    assert(!Similarity.maybeCompactIvfPqDeltas(spark, dir, maxRatio = 0.01))
+    assert(!Similarity.maybeCompactIvfDeltas(spark, dir, maxRatio = 0.01))
   }
 
   test("Similarity: staged rebuild publishes atomically and scrubs crash leftovers") {
@@ -491,9 +491,19 @@ class OperatorsSpec extends AnyFunSuite {
         r.getAs[Int]("rank"))).toSet
     val fresh = java.nio.file.Files.createTempDirectory("ivf-rebuild-fresh").toString
     Similarity.buildIvfIndex(e, fresh, cells = 12, iters = 3).count()
-    assert(rows(Similarity.searchIvfIndex(e, dir, k = 10, nProbe = 9)) ===
-      rows(Similarity.searchIvfIndex(e, fresh, k = 10, nProbe = 9)),
+    val freshRows = rows(Similarity.searchIvfIndex(e, fresh, k = 10, nProbe = 9))
+    assert(rows(Similarity.searchIvfIndex(e, dir, k = 10, nProbe = 9)) === freshRows,
       "rebuilt index drifted from a fresh build")
+    // search reads the code from the segments it serves, not from the
+    // separately published codebook: int8 segments next to a PQ codebook
+    // (a PQ rebuild before its segments land, or what an int8 rebuild over
+    // a PQ store leaves) must still search as int8
+    Similarity.buildIvfIndex(e, dir, cells = 12, iters = 3, pq = Some((16, 32))).count()
+    Similarity.buildIvfIndex(e, dir, cells = 12, iters = 3).count()
+    assert(new java.io.File(dir).listFiles().map(_.getName).toSet ===
+      Set("centroids", "codebook", "segments"))
+    assert(rows(Similarity.searchIvfIndex(e, dir, k = 10, nProbe = 9)) === freshRows,
+      "int8 segments under a PQ codebook drifted from a fresh int8 build")
   }
 
   test("Similarity: appended IVF×int8 index keeps recall; batch rows findable") {
@@ -538,7 +548,7 @@ class OperatorsSpec extends AnyFunSuite {
       val deltaSummary = Similarity.appendToIvfIndex(batch, dir)
         .agg(org.apache.spark.sql.functions.sum("n_vectors")).collect()(0).getLong(0)
       assert(deltaSummary === batch.count(), "delta segment lost batch vectors")
-      val split = pairs(Similarity.searchIvfIndexWithDelta(e, dir, k = 10, nProbe = 9))
+      val split = pairs(Similarity.searchIvfIndex(e, dir, k = 10, nProbe = 9))
       val inMemory = pairs(Similarity.ivfAppendedTopK(
         base = base, batch = batch, k = 10, cells = 12, nProbe = 9, iters = 3))
       assert(split === inMemory,

@@ -574,7 +574,24 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming IVF ingest: per-batch delta segments compose to the batch append path") {
+  /** The two codes every persisted-IVF spec below runs under: int8 (the
+    * default build) and residual PQ. Search, append and compaction read the
+    * code from the stored index, so each spec body is code-agnostic.
+    */
+  private val ivfCodes = Seq("IVF" -> None, "IVF-PQ" -> Some((16, 32)))
+
+  for ((code, pq) <- ivfCodes; (shape, ratio) <- Seq(
+         ": per-batch delta segments compose to the batch append path" -> None,
+         " with mid-stream auto-compaction ≡ the batch append path" -> Some(0.01)))
+  test(s"streaming $code ingest$shape") {
+    // each micro-batch is assigned + encoded into the stored cells (and
+    // codebook) as its own delta segment. Codes are per-row under the
+    // frozen centroids (and codebook), so micro-batching must not change
+    // search results vs one batch append into a twin store. Without a
+    // ratio both streamed deltas are still live when the search unions
+    // them with the base; with one low enough that the first landed delta
+    // exceeds it, the fold runs INSIDE the stream and must not lose or
+    // duplicate rows when it races the next micro-batch.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -582,43 +599,51 @@ class StreamingSpec extends AnyFunSuite {
     val e = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
     val base = e.filter(col("vec_id") % 10 =!= 0)
     val batch = e.filter(col("vec_id") % 10 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("ivf-stream-spec").toString
-    Similarity.buildIvfIndex(base, dir, cells = 12, iters = 3).count()
+    val streamDir = java.nio.file.Files.createTempDirectory("ivf-stream-spec").toString
+    val batchDir = java.nio.file.Files.createTempDirectory("ivf-batch-spec").toString
+    // identical deterministic build (seeded by xxhash64) in both stores
+    for (d <- Seq(streamDir, batchDir))
+      Similarity.buildIvfIndex(base, d, cells = 12, iters = 3, pq = pq).count()
+    def deltaDirs(dir: String) = new java.io.File(dir).listFiles
+      .filter(f => f.isDirectory && f.getName.startsWith("delta")).map(_.getName)
+      .sorted.toSeq
     val input = MemoryStream[(Long, Array[Float])]
     var landed = List.empty[(Long, Long)]
     val q = graft.streaming.VectorIngest.ivfIngestStream(
-      input.toDF().toDF("vec_id", "embedding"), dir) {
-      (id, n) => landed ::= (id, n)
-    }
+      input.toDF().toDF("vec_id", "embedding"), streamDir,
+      compactRatio = ratio) { (id, n) => landed ::= (id, n) }
     try {
       val rows = batch.select("vec_id", "embedding")
         .as[(Long, Array[Float])].collect()
       val (h1, h2) = rows.splitAt(rows.length / 2)
       input.addData(h1.toSeq: _*); q.processAllAvailable()
+      // the 0.01 ratio forces the fold after batch 0 — mid-stream
+      if (ratio.isDefined)
+        assert(deltaDirs(streamDir).isEmpty,
+          s"auto-compaction did not fold batch 0: ${deltaDirs(streamDir).mkString(",")}")
       input.addData(h2.toSeq: _*); q.processAllAvailable()
       assert(landed.map(_._2).sum === rows.length,
         s"delta segments lost vectors: $landed")
       assert(landed.size === 2, s"expected 2 delta segments, saw $landed")
     } finally q.stop()
-    // search over base + the two streamed deltas ≡ the single-shot batch
-    // append (quantization is per-row, so micro-batching must not matter)
-    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"),
-        r.getAs[Int]("rank"))).toSet
-    val streamed = pairs(Similarity.searchIvfIndexWithDelta(e, dir, k = 10, nProbe = 9))
-    val inMemory = pairs(Similarity.ivfAppendedTopK(
-      base = base, batch = batch, k = 10, cells = 12, nProbe = 9, iters = 3))
-    assert(streamed === inMemory,
-      s"streamed index drifted: missing=${(inMemory -- streamed).take(3)} " +
-        s"extra=${(streamed -- inMemory).take(3)}")
-    // compaction folds the deltas into the base store: identical results,
-    // no delta directories left behind
-    Similarity.compactIvfDeltas(spark, dir)
-    val remaining = new java.io.File(dir).listFiles
-      .filter(f => f.isDirectory && f.getName.startsWith("delta"))
-    assert(remaining.isEmpty, remaining.map(_.getName).mkString(","))
-    val compacted = pairs(Similarity.searchIvfIndexWithDelta(e, dir, k = 10, nProbe = 9))
-    assert(compacted === streamed, "compaction changed search results")
+    if (ratio.isEmpty)
+      assert(deltaDirs(streamDir) === Seq("delta_b0", "delta_b1"),
+        "both streamed deltas must be live for the search below")
+    Similarity.appendToIvfIndex(batch, batchDir).count()
+    def pairs(dir: String) =
+      Similarity.searchIvfIndex(e, dir, k = 10, nProbe = 9)
+        .collect().map(r => (r.getAs[Long]("q_id"),
+          r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"))).toSet
+    val streamed = pairs(streamDir)
+    val batched = pairs(batchDir)
+    assert(streamed === batched,
+      s"streamed index drifted: missing=${(batched -- streamed).take(3)} " +
+        s"extra=${(streamed -- batched).take(3)}")
+    // compaction folds whatever is still live into the base store:
+    // identical results, no delta directories left behind
+    Similarity.compactIvfDeltas(spark, streamDir)
+    assert(deltaDirs(streamDir).isEmpty, deltaDirs(streamDir).mkString(","))
+    assert(pairs(streamDir) === batched, "compaction changed search results")
   }
 
   test("streaming IVF ingest is replay-idempotent: a retried micro-batch never duplicates") {
@@ -638,7 +663,7 @@ class StreamingSpec extends AnyFunSuite {
       df.agg(org.apache.spark.sql.functions.sum(col("n_vectors"))).head.getLong(0)
     val first = totalVectors(
       Similarity.appendToIvfIndex(batch, dir, segment = "delta_b0"))
-    def pairs() = Similarity.searchIvfIndexWithDelta(e, dir, k = 10, nProbe = 9)
+    def pairs() = Similarity.searchIvfIndex(e, dir, k = 10, nProbe = 9)
       .collect().map(r => (r.getAs[Long]("q_id"),
         r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"))).toSet
     val afterFirst = pairs()
@@ -654,7 +679,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(pairs() === afterFirst, "replay drifted search results")
   }
 
-  test("IVF compaction crash points leave a consistent, non-duplicating view") {
+  for ((code, pq) <- ivfCodes)
+  test(s"$code compaction crash points leave a consistent, non-duplicating view") {
     import org.apache.spark.sql.functions.col
     import graft.operators.Similarity
     val e = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
@@ -662,16 +688,17 @@ class StreamingSpec extends AnyFunSuite {
     val batch = e.filter(col("vec_id") % 10 === 0)
     val batch2 = e.filter(col("vec_id") % 10 === 1)
     val dir = java.nio.file.Files.createTempDirectory("ivf-crash-spec").toString
-    Similarity.buildIvfIndex(base, dir, cells = 12, iters = 3).count()
+    Similarity.buildIvfIndex(base, dir, cells = 12, iters = 3, pq = pq).count()
     Similarity.appendToIvfIndex(batch, dir).count()
-    def pairs() = Similarity.searchIvfIndexWithDelta(e, dir, k = 10, nProbe = 9)
+    def pairs() = Similarity.searchIvfIndex(e, dir, k = 10, nProbe = 9)
       .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"),
         r.getAs[Int]("rank"))).toSet
     val baseline = pairs()
     def f(n: String) = new java.io.File(dir, n)
 
     // crash A: base swapped out to segments_old, commit rename never landed —
-    // readers must see segments_old + the live delta, ignore the stale stage
+    // the search must see segments_old + the live delta, ignore the stale
+    // stage (a search reading `segments` directly would throw here)
     assert(f("segments").renameTo(f("segments_old")))
     assert(f("segments_compacting").mkdir())
     assert(pairs() === baseline, "crash-A read drifted")
@@ -701,64 +728,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(pairs() === withNew, "final compaction drifted")
     assert(!f("delta").exists && !f("segments_old").exists &&
       !f("segments/_FOLDED_DELTAS").exists)
-  }
-
-  test("streaming IVF-PQ ingest with mid-stream auto-compaction ≡ the batch append path") {
-    // r15 verdict task #3: the IVF-PQ store gets the same
-    // one-segment-per-micro-batch ingest as the int8 index, PLUS the
-    // ratio-triggered fold running INSIDE the stream (compactRatio set low
-    // enough that the first landed delta exceeds it). Residual encoding is
-    // per-row under the frozen centroids+codebook, so (a) micro-batching
-    // must not change search results vs one batch append, and (b) a fold
-    // racing the next micro-batch must not lose or duplicate rows.
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Similarity
-    val e = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
-    val base = e.filter(col("vec_id") % 10 =!= 0)
-    val batch = e.filter(col("vec_id") % 10 === 0)
-    val streamDir = java.nio.file.Files.createTempDirectory("ivfpq-stream").toString
-    val batchDir = java.nio.file.Files.createTempDirectory("ivfpq-batch").toString
-    // identical deterministic build (seeded by xxhash64) in both stores
-    Similarity.buildIvfPqIndex(base, streamDir, cells = 12, iters = 3).count()
-    Similarity.buildIvfPqIndex(base, batchDir, cells = 12, iters = 3).count()
-    val input = MemoryStream[(Long, Array[Float])]
-    var landed = List.empty[(Long, Long)]
-    val q = graft.streaming.VectorIngest.ivfPqIngestStream(
-      input.toDF().toDF("vec_id", "embedding"), streamDir,
-      compactRatio = Some(0.01)) { (id, n) => landed ::= (id, n) }
-    try {
-      val rows = batch.select("vec_id", "embedding")
-        .as[(Long, Array[Float])].collect()
-      val (h1, h2) = rows.splitAt(rows.length / 2)
-      input.addData(h1.toSeq: _*); q.processAllAvailable()
-      // the 0.01 ratio forces the fold after batch 0 — mid-stream
-      val afterFold = new java.io.File(streamDir).listFiles
-        .filter(f => f.isDirectory && f.getName.startsWith("delta"))
-      assert(afterFold.isEmpty,
-        s"auto-compaction did not fold batch 0: ${afterFold.map(_.getName).mkString(",")}")
-      input.addData(h2.toSeq: _*); q.processAllAvailable()
-      assert(landed.map(_._2).sum === rows.length,
-        s"delta segments lost vectors: $landed")
-      assert(landed.size === 2, s"expected 2 micro-batches, saw $landed")
-    } finally q.stop()
-    Similarity.appendToIvfPqIndex(batch, batchDir).count()
-    def pairs(dir: String) =
-      Similarity.searchIvfPqIndexWithDelta(e, dir, k = 10, nProbe = 9)
-        .collect().map(r => (r.getAs[Long]("q_id"),
-          r.getAs[Long]("neighbor_id"), r.getAs[Int]("rank"))).toSet
-    val streamed = pairs(streamDir)
-    val batched = pairs(batchDir)
-    assert(streamed === batched,
-      s"streamed IVF-PQ store drifted: missing=${(batched -- streamed).take(3)} " +
-        s"extra=${(streamed -- batched).take(3)}")
-    // final fold of whatever is still live: identical results, clean store
-    Similarity.compactIvfPqDeltas(spark, streamDir)
-    assert(pairs(streamDir) === batched, "post-stream compaction drifted")
-    val remaining = new java.io.File(streamDir).listFiles
-      .filter(f => f.isDirectory && f.getName.startsWith("delta"))
-    assert(remaining.isEmpty, remaining.map(_.getName).mkString(","))
   }
 
   test("streaming funnel survives a checkpoint restart without double-emitting") {

@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the r17 Tuning seams: session-isolated pinPartitioned (no caller-
-  * session AQE flip, partitioning visible to later plans) and the
-  * concurrent-arm share that divides fanout across gate arms.
+  * session AQE flip, partitioning visible to later plans, no stale view
+  * resolution in the cached clone) and the concurrent-arm share that
+  * divides fanout across gate arms.
   */
 class TuningSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -58,6 +59,24 @@ class TuningSpec extends AnyFunSuite {
         assert(d.count() === 200); Tuning.freeCheckpoint(d)
       }
     } finally spark.conf.set(key, orig)
+  }
+
+  test("pinPartitioned reads a replaced temp view's current definition") {
+    // the AQE-off clone is cached per session, and its catalog is a copy
+    // taken when the clone was created: the pin must hand it the caller's
+    // ANALYZED plan, or a view replaced after the first pin re-resolves to
+    // its old definition inside the clone
+    val view = "tuning_spec_pin_view"
+    Seq(1L, 2L).toDF("v").createOrReplaceTempView(view)
+    try {
+      val first = Tuning.pinPartitioned(spark.table(view))
+      assert(first.collect().map(_.getLong(0)).sorted === Array(1L, 2L))
+      Seq(7L, 8L, 9L).toDF("v").createOrReplaceTempView(view)
+      val second = Tuning.pinPartitioned(spark.table(view))
+      assert(second.collect().map(_.getLong(0)).sorted === Array(7L, 8L, 9L),
+        "pin resolved the view's stale definition")
+      Seq(first, second).foreach(Tuning.freeCheckpoint)
+    } finally spark.catalog.dropTempView(view)
   }
 
   test("concurrently divides the arm share; fanout/availableCores honor it") {
