@@ -45,8 +45,8 @@ object Tuning {
     * `localCheckpoint()`), so results are submission-order-independent.
     * On a real cluster the same submission shape fills otherwise-idle
     * executors during each arm's narrow stages. Any thunk failure
-    * propagates (no silent partial gates); the pool never outlives the
-    * call.
+    * propagates (no silent partial gates), but only once every arm has
+    * ended (see [[awaitAll]]), so no arm's Spark jobs outlive the call.
     */
   def concurrently[T](thunks: Seq[() => T]): Seq[T] = {
     if (thunks.lengthCompare(2) < 0) return thunks.map(_())
@@ -65,10 +65,25 @@ object Tuning {
         armShare.set(parentShare * nArms)
         try t() finally armShare.remove()
       })
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(fs),
-        scala.concurrent.duration.Duration.Inf)
+      awaitAll(fs)
     } finally pool.shutdown()
+  }
+
+  /** Wait for EVERY future, then return their results in input order or
+    * throw the first failure in input order, with the other failures
+    * attached as suppressed. `Future.sequence` fails fast instead: the
+    * caller returns (and releases whatever the futures use) while sibling
+    * futures are still running Spark jobs.
+    */
+  private[graft] def awaitAll[T](fs: Seq[scala.concurrent.Future[T]]): Seq[T] = {
+    val done = fs.map(f =>
+      scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf).value.get)
+    done.collect { case scala.util.Failure(e) => e } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => done.map(_.get)
+    }
   }
 
   /** Deterministic scratch directory for an entry's persisted artifacts,

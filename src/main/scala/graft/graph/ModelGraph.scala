@@ -1,9 +1,9 @@
 package graft.graph
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.concurrent.{ExecutionContext, Future}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** dbt-style model DAG: named models with declared `ref()` dependencies,
   * topologically ordered, independent models built concurrently.
@@ -22,7 +22,11 @@ final case class Model(
     materialization: Materialization = View)
 
 sealed trait Materialization
-/** dbt `materialized='view'` → lazy DataFrame (plan only, recomputed per use). */
+/** dbt `materialized='view'` → lazy DataFrame (plan only). A view that two
+  * or more models of a graph read is computed once per [[ModelGraph.run]]:
+  * the run caches it for its consumers and releases it when it returns;
+  * outside a run it is recomputed per use, like a SQL view.
+  */
 case object View extends Materialization
 /** dbt `materialized='table'` → persisted columnar table, optionally
   * cluster-sorted; `format` ∈ {parquet, orc} (both native columnar sources
@@ -85,10 +89,33 @@ final class ModelGraph(val models: Seq[Model]) {
     order.result()
   }
 
+  /** Views read by two or more models — the reference's `/*+ MATERIALIZED */`
+    * CTEs (SURVEY.md, fct_balanceSheet.sql:8,10). In [[ModelGraph.edgar]]
+    * each fact joins each dim twice, so an uncached dim subtree would be
+    * recomputed six times per run.
+    */
+  private val sharedViews: Set[String] = models
+    .filter(m => m.materialization == View &&
+      models.count(_.deps.contains(m.name)) >= 2)
+    .map(_.name).toSet
+
   /** Build every model against a registry seeded with the source tables.
     * Models at the same topological depth run concurrently (Futures sharing
     * the SparkSession), like dbt threads. Materialization is applied by
     * `materialize` (injected so tests can run fully lazy).
+    *
+    * Shared work runs once: the frame `materialize` returns for a View read
+    * by two or more models is persisted, so every downstream build in the
+    * run reads the cached relation instead of recomputing the subtree. The
+    * cache is lazy (filled by the first job that reads it) and released
+    * when `run` returns, on success and on failure; the returned frames and
+    * temp views keep their full lineage and recompute once released. A
+    * frame that is already cached when it is built is left as it is.
+    *
+    * A failing model fails the run only after every model of its wave has
+    * ended, so no model of a failed run is still building (or writing its
+    * status) once `run` has thrown; the first failure in wave order is
+    * thrown, the others are attached to it as suppressed.
     */
   def run(sources: Map[String, DataFrame],
           materialize: (Model, DataFrame) => DataFrame = (_, df) => df,
@@ -99,6 +126,7 @@ final class ModelGraph(val models: Seq[Model]) {
       s"deps not found among models or sources: ${missing.mkString(", ")}")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    var pinned = List.empty[DataFrame]
     try {
       // group topo order into waves of mutually independent models
       var registry = sources
@@ -108,16 +136,24 @@ final class ModelGraph(val models: Seq[Model]) {
           byName(n).deps.forall(d => registry.contains(d) || !byName.contains(d)))
         require(wave.nonEmpty, s"unresolvable deps for ${remaining.head}")
         val reg = registry
-        val built = Await.result(
-          Future.sequence(wave.map { n =>
-            val m = byName(n)
-            Future(n -> materialize(m, m.build(reg)))
-          }), Duration.Inf)
+        val built = graft.Tuning.awaitAll(wave.map { n =>
+          val m = byName(n)
+          Future(n -> materialize(m, m.build(reg)))
+        })
+        built.foreach { case (n, df) =>
+          if (sharedViews(n) && df.storageLevel == StorageLevel.NONE)
+            pinned = df.persist() :: pinned
+        }
         registry = registry ++ built
         remaining = remaining.drop(wave.size)
       }
       registry
-    } finally pool.shutdown()
+    } finally {
+      pool.shutdown()
+      // newest first: a pin released before the pins built on it would
+      // make the cache manager re-plan those dependents for nothing
+      pinned.foreach(_.unpersist())
+    }
   }
 }
 

@@ -8,7 +8,11 @@ import graft.graph.{Bucketed, Incremental, Materialization, MergeInc, Model, Par
 /** Model materializer: dbt materializations → Spark write paths
   * (reference: masterfindata/dbt_project.yml:26-45, fct_balanceSheet.sql:1-6).
   *
-  *  - view → temp view + lazy DataFrame (recomputed per use, like a SQL view).
+  *  - view → temp view + lazy DataFrame (recomputed per use, like a SQL
+  *    view, except that [[graft.graph.ModelGraph.run]] computes a view read
+  *    by two or more models once per run).
+  *  - table / partitioned → read back with the schema just written (no
+  *    schema-inference job).
   *  - table → parquet under `warehouseDir`, `cluster_by` mapped to
   *    `repartition(keys).sortWithinPartitions(keys)` (SURVEY.md §4) so files
   *    are clustered for downstream min/max pruning — the Spark analog of
@@ -36,7 +40,7 @@ final class Materializer(spark: SparkSession, warehouseDir: String,
           else df.repartition(clusterPartitions, clusterBy.map(col): _*)
             .sortWithinPartitions(clusterBy.map(col): _*)
         out.write.mode("overwrite").format(format).save(path(name))
-        val back = spark.read.format(format).load(path(name))
+        val back = spark.read.format(format).schema(out.schema).load(path(name))
         back.createOrReplaceTempView(name)
         back
       case Partitioned(partitionBy, format) =>
@@ -44,7 +48,11 @@ final class Materializer(spark: SparkSession, warehouseDir: String,
         // column prunes directories before any file is opened
         df.write.mode("overwrite").partitionBy(partitionBy: _*)
           .format(format).save(path(name))
-        val back = spark.read.format(format).load(path(name))
+        // data columns only: the partition columns' types are still
+        // inferred from the directory names, as a plain read infers them
+        val data = df.schema.filterNot(f => partitionBy.exists(_.equalsIgnoreCase(f.name)))
+        val back = spark.read.format(format)
+          .schema(org.apache.spark.sql.types.StructType(data)).load(path(name))
         back.createOrReplaceTempView(name)
         back
       case Bucketed(bucketBy, numBuckets) =>

@@ -63,14 +63,15 @@ object TsvReader {
 
   /** `COPY INTO`-faithful load: parse the TSV once (all columns, whole-row
     * malformed judgment) and land it at `target` as parquet; returns the
-    * landed table.
+    * landed table, read back with the schema it was written with (no
+    * schema-inference job).
     */
   def load(spark: SparkSession, path: String, schema: StructType, target: String,
            pattern: Option[String] = None,
            boolCols: Seq[String] = Nil): DataFrame = {
-    read(spark, path, schema, pattern, boolCols)
-      .write.mode("overwrite").parquet(target)
-    spark.read.parquet(target)
+    val parsed = read(spark, path, schema, pattern, boolCols)
+    parsed.write.mode("overwrite").parquet(target)
+    spark.read.schema(parsed.schema).parquet(target)
   }
 
   /** Load all four raw EDGAR tables from a directory of `{sub,tag,num,pre}.txt`.

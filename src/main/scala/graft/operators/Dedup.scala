@@ -1164,7 +1164,7 @@ object Dedup {
     */
   private def bandedNearDupIds(b1: DataFrame, corpus: DataFrame, threshold: Double,
                                numHashes: Int, bands: Int,
-                               corpusBytes: Long = 0L): DataFrame = {
+                               corpusBytes: Long): DataFrame = {
     val par = graft.Tuning.fanout(b1.sparkSession, corpusBytes)
     val shB = b1.select(col("doc_id").as("b_id"), hashedShingles(col("text")).as("gb"))
       .withColumn("szb", size(col("gb")))

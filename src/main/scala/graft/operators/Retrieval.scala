@@ -517,7 +517,6 @@ object Retrieval {
     * merged stats land with the atomic commit.
     */
   def compactTextIndex(spark: SparkSession, indexDir: String): Unit = {
-    val fs = graft.io.AtomicPublish.fsFor(spark, indexDir)
     graft.io.DeltaStore.compactDeltas(spark, indexDir, "postings", "tokb",
       preCommit = bm25StatsPreCommit(spark, indexDir))
   }

@@ -1,8 +1,11 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftInternals, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeMap, Expression, If, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Count
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Data-quality operators — the Spark realization of the reference's dbt
   * generic + dbt_expectations tests (SURVEY.md §2.9, T1–T10). Each check
@@ -14,7 +17,8 @@ import org.apache.spark.sql.types.DataType
   * violates). `Checks.report` gives violation counts per check.
   *
   * Scale note: every check is a single filter or partial-agg over the table —
-  * no collects; `report` fires them as independent Spark jobs.
+  * no collects. `report` counts the plain filters over one table in a single
+  * scan of it and runs those scans and the remaining checks concurrently.
   */
 object Checks {
 
@@ -146,9 +150,58 @@ object Checks {
     def passed: Boolean = violations == 0L
   }
 
-  /** Run named checks, returning violation counts (reporting mode). */
-  def report(checks: Seq[(String, DataFrame)]): Seq[CheckResult] =
-    checks.map { case (name, df) => CheckResult(name, df.count()) }
+  /** Run named checks, returning violation counts (reporting mode), one
+    * per check in input order.
+    *
+    * Most checks are a plain `Filter(cond, table)`: those over the same
+    * table (same canonical plan) are counted together by one aggregate,
+    * `count(if(cond_i, 1, null))` per check, so the table is scanned once
+    * instead of once per check. A row where `cond_i` is null counts for
+    * neither form. Every other check (`unique`, `relationships`,
+    * `freshness`, a filter alone on its table) is counted as it is. The
+    * table scans and the other counts run concurrently.
+    */
+  def report(checks: Seq[(String, DataFrame)]): Seq[CheckResult] = {
+    val filters = checks.map { case (_, df) => filterOf(df.queryExecution.analyzed) }
+    val shared = checks.indices.filter(filters(_).isDefined)
+      .groupBy(filters(_).get._2.canonicalized).values.filter(_.size >= 2).toSeq
+    val fused = shared.flatten.toSet
+    val counts = graft.Tuning.concurrently(
+      shared.map(g => () =>
+        g.zip(countTogether(checks(g.head)._2.sparkSession, g.map(filters(_).get)))) ++
+        checks.indices.filterNot(fused).map(i => () => Seq(i -> checks(i)._2.count())))
+      .flatten.toMap
+    checks.indices.map(i => CheckResult(checks(i)._1, counts(i)))
+  }
+
+  /** `plan` as `Filter(cond, child)` with a deterministic, subquery-free
+    * condition, looking through deterministic projections (a check on
+    * `df.withColumn(...)` filters `df` itself).
+    */
+  private def filterOf(plan: LogicalPlan): Option[(Expression, LogicalPlan)] = plan match {
+    case Filter(cond, Project(list, child)) if list.forall(_.deterministic) =>
+      val defs = AttributeMap(list.collect { case a: Alias => a.toAttribute -> a.child })
+      filterOf(Filter(cond.transform { case a: Attribute if defs.contains(a) => defs(a) }, child))
+    case Filter(cond, child) if cond.deterministic && !SubqueryExpression.hasSubquery(cond) =>
+      Some(cond -> child)
+    case _ => None
+  }
+
+  /** Rows of one child satisfying each condition, in one aggregate over the
+    * first member's child (the others' attributes rebound to it by position).
+    */
+  private def countTogether(spark: SparkSession,
+                            members: Seq[(Expression, LogicalPlan)]): Seq[Long] = {
+    val child = members.head._2
+    val aggs = members.zipWithIndex.map { case ((cond, own), k) =>
+      val byPos = AttributeMap(own.output.zip(child.output))
+      val rebound = cond.transform { case a: Attribute if byPos.contains(a) => byPos(a) }
+      Alias(Count(If(rebound, Literal(1), Literal(null, IntegerType)))
+        .toAggregateExpression(), s"v$k")()
+    }
+    val row = GraftInternals.ofRows(spark, Aggregate(Nil, aggs, child)).head()
+    members.indices.map(row.getLong)
+  }
 
   /** The reference's declared test suite over the four raw EDGAR tables —
     * ported line-by-line from the dbt YAMLs (masterfindata/models/Staging/

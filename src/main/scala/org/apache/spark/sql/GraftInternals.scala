@@ -3,7 +3,9 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Compile-time bridge to two `private[sql]` Spark seams graft needs for
-  * session-isolated checkpoint materialization (`graft.Tuning.pinPartitioned`):
+  * session-isolated checkpoint materialization (`graft.Tuning.pinPartitioned`)
+  * and for running a hand-built plan (`graft.quality.Checks.report`'s
+  * one-scan aggregate):
   *
   *  - `SparkSession.cloneSession()` — a fork of the session (same
   *    SparkContext and shared state, COPIED SQLConf), so a conf flip scoped

@@ -14,12 +14,6 @@ class RewriteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val pairs = Seq(
-    ("the quick brown fox", "the quick brown cat"),
-    ("aaaa", "aaab"),
-    ("xy", "xyz"), // left shorter than n=3 → empty set
-    ("identical text", "identical text"))
-
   test("IntersectSizeRewrite substitutes the kernel and preserves values") {
     // over a parquet source (a local relation would constant-fold away
     // before the rule could be observed)

@@ -156,7 +156,7 @@ class ServeSpec extends AnyFunSuite {
   test("result cache: underlying-data change invalidates within TTL") {
     val dir = java.nio.file.Files.createTempDirectory("graft-rc").toFile.getAbsolutePath
     Seq((1L, "x")).toDF("id", "s").write.mode("overwrite").parquet(dir)
-    var now = 0L
+    val now = 0L
     val cache = new ResultCache(ttlSeconds = 1000, clock = () => now)
     def q = spark.read.parquet(dir).groupBy("s").count()
     assert(cache.through(q).collect().head.getLong(1) === 1L)
