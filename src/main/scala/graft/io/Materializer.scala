@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.graph.{Bucketed, Incremental, Materialization, MergeInc, Model, Partitioned, Table, View}
 
@@ -11,8 +12,10 @@ import graft.graph.{Bucketed, Incremental, Materialization, MergeInc, Model, Par
   *  - view → temp view + lazy DataFrame (recomputed per use, like a SQL
   *    view, except that [[graft.graph.ModelGraph.run]] computes a view read
   *    by two or more models once per run).
-  *  - table / partitioned → read back with the schema just written (no
-  *    schema-inference job).
+  *  - every written materialization (table, partitioned, merge-incremental,
+  *    incremental) → read back with the schema just written (no
+  *    schema-inference job); an incremental write infers its target's
+  *    schema once, to find the watermark.
   *  - table → parquet under `warehouseDir`, `cluster_by` mapped to
   *    `repartition(keys).sortWithinPartitions(keys)` (SURVEY.md §4) so files
   *    are clustered for downstream min/max pruning — the Spark analog of
@@ -40,7 +43,7 @@ final class Materializer(spark: SparkSession, warehouseDir: String,
           else df.repartition(clusterPartitions, clusterBy.map(col): _*)
             .sortWithinPartitions(clusterBy.map(col): _*)
         out.write.mode("overwrite").format(format).save(path(name))
-        val back = spark.read.format(format).schema(out.schema).load(path(name))
+        val back = readBack(path(name), format, out.schema, Nil)
         back.createOrReplaceTempView(name)
         back
       case Partitioned(partitionBy, format) =>
@@ -48,11 +51,7 @@ final class Materializer(spark: SparkSession, warehouseDir: String,
         // column prunes directories before any file is opened
         df.write.mode("overwrite").partitionBy(partitionBy: _*)
           .format(format).save(path(name))
-        // data columns only: the partition columns' types are still
-        // inferred from the directory names, as a plain read infers them
-        val data = df.schema.filterNot(f => partitionBy.exists(_.equalsIgnoreCase(f.name)))
-        val back = spark.read.format(format)
-          .schema(org.apache.spark.sql.types.StructType(data)).load(path(name))
+        val back = readBack(path(name), format, df.schema, partitionBy)
         back.createOrReplaceTempView(name)
         back
       case Bucketed(bucketBy, numBuckets) =>
@@ -74,7 +73,9 @@ final class Materializer(spark: SparkSession, warehouseDir: String,
         val tpath = new org.apache.hadoop.fs.Path(target)
         val fs = tpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val delCol = deleteColOpt.map(col)
-        val back = (fs.exists(tpath), partitionByOpt) match {
+        // each branch writes a frame, then reads the target back with that
+        // frame's schema
+        val written = (fs.exists(tpath), partitionByOpt) match {
           case (false, partOpt) =>
             // first batch: tombstones have nothing to delete; feed metadata
             // (the delete flag) never lands in the table
@@ -82,7 +83,7 @@ final class Materializer(spark: SparkSession, warehouseDir: String,
             val seed = deleteColOpt.map(seed0.drop(_)).getOrElse(seed0)
             val w = seed.write.mode("overwrite")
             partOpt.fold(w)(p => w.partitionBy(p)).parquet(target)
-            spark.read.parquet(target)
+            seed
           case (true, Some(p)) =>
             // partition-scoped merge: only the feed's partitions are read,
             // merged, and dynamically overwritten — untouched partitions'
@@ -105,32 +106,47 @@ final class Materializer(spark: SparkSession, warehouseDir: String,
             touched.filterNot(written).foreach { v =>
               fs.delete(new org.apache.hadoop.fs.Path(tpath, s"$p=$v"), true)
             }
-            spark.read.parquet(target)
+            merged
           case (true, None) =>
             val merged = graft.operators.Scd
               .mergeUpsert(spark.read.parquet(target), df, keys, deleteWhen = delCol)
               .localCheckpoint()
             merged.write.mode("overwrite").parquet(target)
-            spark.read.parquet(target)
+            merged
         }
+        val back = readBack(target, "parquet", written.schema, partitionByOpt.toSeq)
         back.createOrReplaceTempView(name)
         back
       case Incremental(wmCol) =>
         val target = path(name)
-        val exists = new java.io.File(target).exists() ||
-          scala.util.Try(spark.read.parquet(target).schema).isSuccess
-        if (!exists) {
-          df.write.mode("overwrite").parquet(target)
-        } else {
-          val existing = spark.read.parquet(target)
-          val maxWm = existing.agg(max(col(wmCol))).head.get(0)
-          val fresh =
-            if (maxWm == null) df
-            else df.filter(col(wmCol) >= lit(maxWm))
-          fresh.write.mode("append").parquet(target)
-        }
-        val back = spark.read.parquet(target)
+        val tpath = new org.apache.hadoop.fs.Path(target)
+        val fs = tpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val schema =
+          if (!fs.exists(tpath)) {
+            df.write.mode("overwrite").parquet(target)
+            df.schema
+          } else {
+            val existing = spark.read.parquet(target)
+            val maxWm = existing.agg(max(col(wmCol))).head.get(0)
+            val fresh =
+              if (maxWm == null) df
+              else df.filter(col(wmCol) >= lit(maxWm))
+            fresh.write.mode("append").parquet(target)
+            existing.schema
+          }
+        val back = readBack(target, "parquet", schema, Nil)
         back.createOrReplaceTempView(name)
         back
     }
+
+  /** The table at `dir`, read with the schema it was written with instead
+    * of inferring it (an inference job per read). Only the data columns are
+    * given: partition columns' types are still inferred from the directory
+    * names, as a plain read infers them.
+    */
+  private def readBack(dir: String, format: String, written: StructType,
+                       partitionBy: Seq[String]): DataFrame = {
+    val data = written.filterNot(f => partitionBy.exists(_.equalsIgnoreCase(f.name)))
+    spark.read.format(format).schema(StructType(data)).load(dir)
+  }
 }

@@ -303,7 +303,7 @@ object AsOfJoinNative {
         nullable = true)()
     }
 
-    org.apache.spark.sql.graftbridge.Bridge.ofRows(spark,
+    org.apache.spark.sql.GraftInternals.ofRows(spark,
       GraftAsOfJoin(lPlan, rPlan, lKeys, rKeys, lTime, rTime,
         carrySrcAttrs, carryOutAttrs, direction, tolerance))
   }

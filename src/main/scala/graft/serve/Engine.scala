@@ -26,7 +26,16 @@ final class Engine(spark: SparkSession, cache: Option[ResultCache] = None) {
 
   def table(name: String): DataFrame = spark.table(name)
 
-  /** Filtered, paginated table fetch (deterministic page iff orderBy set). */
+  /** Filtered, paginated table fetch (deterministic page iff orderBy set).
+    *
+    * With a cache, the page goes through [[ResultCache.through]]: a miss
+    * whose result Catalyst sizes at or below
+    * [[ResultCache.DriverResultMaxBytes]] executes here, before `select`
+    * returns, and the returned frame reads the rows from the driver with no
+    * Spark job (as does every later hit); a larger result is persisted and
+    * executes on the caller's first action. Without a cache the frame is
+    * lazy as usual.
+    */
   def select(tableName: String, filters: Seq[FilterSpec] = Nil,
              limit: Int = DefaultLimit, offset: Int = 0,
              orderBy: Seq[String] = Nil): DataFrame = {
@@ -36,7 +45,10 @@ final class Engine(spark: SparkSession, cache: Option[ResultCache] = None) {
     cache.fold(paged)(_.through(paged))
   }
 
-  /** Ad-hoc gateway: SELECT-only ([[gatedSql]]), results through the cache. */
+  /** Ad-hoc gateway: SELECT-only ([[gatedSql]]), results through the cache.
+    * As with [[select]], a cache miss of a small result executes the query
+    * here, and the returned frame is served from the driver.
+    */
   def sql(query: String): DataFrame = {
     val df = gatedSql(query)
     cache.fold(df)(_.through(df))

@@ -14,8 +14,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Two tiers, write-through:
   *  - a LOCAL handle map with [[InMemoryCacheStore]] semantics, so the
-  *    owning driver keeps hitting its persisted (block-manager) handle and
-  *    eviction still unpersists it;
+  *    owning driver keeps hitting its own handle (driver-local rows or a
+  *    persisted frame, whichever tier [[ResultCache]] chose) and eviction
+  *    still releases it;
   *  - a SHARED directory holding `k<key>` parquet data plus a `k<key>.meta`
   *    marker with the creation time. The meta file is written LAST, so its
   *    presence means the data is fully committed — a reader never sees a
@@ -26,7 +27,8 @@ import org.apache.spark.sql.SparkSession
   * rehydrated frame scans the materialized result, which at 100 TB is the
   * point: the EXPENSIVE plan ran once on some driver; everyone else pays a
   * column-pruned scan of its (much smaller) result. TTL, fingerprinting,
-  * eviction and stats all stay in [[ResultCache]] — this class only moves
+  * the tier choice, eviction of the oldest-created entry and stats all stay
+  * in [[ResultCache]] — this class only moves
   * the entry map out of the process, which is the seam's contract.
   */
 final class FileCacheStore(spark: SparkSession, rootDir: String) extends CacheStore {
@@ -80,14 +82,14 @@ final class FileCacheStore(spark: SparkSession, rootDir: String) extends CacheSt
 
   override def size: Int = keys.size
 
-  // `size`/`keys` back the LRU's maxEntries check, which runs on EVERY
-  // through() — a raw listStatus there makes each cache hit pay a directory
-  // listing. The listing is cached for a short TTL instead: local mutations
-  // (put/remove) invalidate it immediately, so this process's eviction
-  // decisions stay exact; another process's writes become visible to
-  // size/oldestKey at most `listingTtlMs` late, which can only delay a
-  // shared eviction by one window. Correctness is unaffected — `get` never
-  // consults the listing, it reads the key's meta file directly.
+  // `size`/`keys` back the maxEntries check that evicts the oldest-created
+  // entry, which runs on every miss — a raw listStatus there makes each
+  // miss pay a directory listing. The listing is cached for a short TTL
+  // instead: local mutations (put/remove) invalidate it immediately, so this
+  // process's eviction decisions stay exact; another process's writes become
+  // visible to size/oldestKey at most `listingTtlMs` late, which can only
+  // delay a shared eviction by one window. Correctness is unaffected — `get`
+  // never consults the listing, it reads the key's meta file directly.
   private val listingTtlMs = 2000L
   // expired-sentinel is -1, NOT Long.MinValue: `now - Long.MinValue`
   // overflows negative, which would make the staleness check read the

@@ -2,13 +2,20 @@ package graft.serve
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.{Await, Future, Promise}
+import scala.concurrent.duration.Duration
 
-/** One cached result: the persisted (block-manager-backed) DataFrame handle
-  * and its creation time. What a cross-process store would serialize is the
-  * MATERIALIZED location (a parquet path / table name), not this handle —
-  * see [[CacheStore]].
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftInternals}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+
+/** One cached result and its creation time. The handle is one of two tiers
+  * (see [[ResultCache]]): a driver-local frame over the collected rows (a
+  * `LocalRelation`, read without a Spark job) for a result Catalyst sizes at
+  * or below [[ResultCache.DriverResultMaxBytes]], else a persisted
+  * (block-manager-backed) frame. What a cross-process store would serialize
+  * is the MATERIALIZED location (a parquet path / table name), not this
+  * handle — see [[CacheStore]].
   */
 final case class CachedResult(df: DataFrame, createdMs: Long)
 
@@ -17,8 +24,10 @@ final case class CachedResult(df: DataFrame, createdMs: Long)
   * driver-local state. [[InMemoryCacheStore]] is the single-process default;
   * a cross-process implementation stores key → (materialized path,
   * createdMs) in any shared KV and rehydrates with `spark.read` — the
-  * ResultCache logic (fingerprinting, TTL, eviction, stats) is unchanged
-  * either way, which is the point of the seam.
+  * ResultCache logic (fingerprinting, tiers, TTL, eviction, stats) is
+  * unchanged either way, which is the point of the seam. A store holds
+  * either tier's handle as it is given; `remove` hands it back so the cache
+  * can release a persisted one.
   */
 trait CacheStore {
   def get(key: Long): Option[CachedResult]
@@ -29,7 +38,7 @@ trait CacheStore {
   def oldestKey: Option[Long]
 }
 
-/** Driver-local store: a concurrent map of plan-hash → persisted handle. */
+/** Driver-local store: a concurrent map of plan-hash → cached handle. */
 final class InMemoryCacheStore extends CacheStore {
   private val entries = new ConcurrentHashMap[Long, CachedResult]()
   override def get(key: Long): Option[CachedResult] = Option(entries.get(key))
@@ -61,27 +70,48 @@ final class InMemoryCacheStore extends CacheStore {
   * version derived from the plan's input files ([[dataVersion]]): rewriting
   * the underlying parquet changes the fingerprint, so a cached result can
   * never serve stale data within TTL (the reference's text-keyed cache can).
-  * Value = the persisted (in-memory/disk) DataFrame; entries expire after
-  * `ttlSeconds` (reference TTL: 3600 s) and are unpersisted on eviction.
-  * An entry orphaned by a data change lingers only until TTL/LRU eviction —
-  * it can no longer be hit, because no incoming query maps to its key.
   *
-  * Scale notes: persistence is cluster-wide (Spark block manager), the store
-  * only holds plan-hash → handle on the driver; swap [[CacheStore]] to share
-  * results across driver processes. The data version stats at most
-  * [[ResultCache.MaxStatFiles]] files — past that it folds the distinct
-  * parent DIRECTORIES' status instead (a parquet overwrite rewrites the
-  * directory), keeping namenode calls bounded no matter how many files a
-  * 100 TB table has.
+  * Value = the result, in one of two tiers chosen on a miss from Catalyst's
+  * size estimate (`optimizedPlan.stats.sizeInBytes`):
+  *  - at or below [[ResultCache.DriverResultMaxBytes]] the query runs once,
+  *    inside `through` (a normal SQL execution, so listeners see it), and its
+  *    rows are kept on the driver as a `LocalRelation`-backed frame. Reading
+  *    it plans to `LocalTableScanExec` and runs no Spark job; nothing is
+  *    registered with Spark's CacheManager, so other queries' planning does
+  *    not match against it and dropping it costs nothing. `maxEntries`
+  *    entries hold at most `maxEntries` × the cap of driver memory (by
+  *    estimate).
+  *  - above the cap the result is `persist()`ed (lazily: the caller's first
+  *    action fills it) and unpersisted when it leaves the cache, so a large
+  *    result lives in the cluster's block managers, never on the driver.
+  *
+  * Entries expire `ttlSeconds` after they were created (reference TTL:
+  * 3600 s). When the cache is full, a miss drops the entry created first; a
+  * hit does not refresh an entry's age. An entry orphaned by a data change
+  * lingers only until it expires or is dropped as the oldest — it can no
+  * longer be hit, because no incoming query maps to its key.
+  *
+  * Concurrent misses of one key run the query once: the first caller
+  * computes, later callers wait for its result and count as hits.
+  *
+  * Scale notes: the store only holds plan-hash → handle on the driver; swap
+  * [[CacheStore]] to share results across driver processes. The data
+  * version stats at most [[ResultCache.MaxStatFiles]] files — past that it
+  * folds the distinct parent DIRECTORIES' status instead (a parquet
+  * overwrite rewrites the directory), keeping namenode calls bounded no
+  * matter how many files a 100 TB table has.
   */
 final class ResultCache(ttlSeconds: Long = 3600, maxEntries: Int = 64,
                         clock: () => Long = () => System.currentTimeMillis(),
                         store: CacheStore = new InMemoryCacheStore) {
 
-  import ResultCache.{mix, MaxStatFiles}
+  import ResultCache.{mix, DriverResultMaxBytes, MaxStatFiles}
 
   private var hitCount = 0L
   private var missCount = 0L
+
+  /** Misses being computed, by key: a later miss of the key waits for it. */
+  private val inFlight = new ConcurrentHashMap[Long, Future[DataFrame]]()
 
   /** Version hash of the data behind a plan: folds (path, mtime, length) of
     * every input file (dir-level past [[ResultCache.MaxStatFiles]]).
@@ -122,31 +152,71 @@ final class ResultCache(ttlSeconds: Long = 3600, maxEntries: Int = 64,
     mix(df.queryExecution.analyzed.canonicalized.semanticHash().toLong, dataVersion(df))
 
   /** Route a DataFrame through the cache: same semantic plan over unchanged
-    * data within TTL returns the already-persisted result.
+    * data within TTL returns the cached result. On a miss a result at or
+    * below [[ResultCache.DriverResultMaxBytes]] is computed here, before
+    * `through` returns; a larger one is persisted and computed by the
+    * caller's first action.
     */
   def through(df: DataFrame): DataFrame = {
     val key = fingerprint(df)
     val now = clock()
-    val cur = store.get(key)
-    cur match {
-      case Some(e) if now - e.createdMs < ttlSeconds * 1000 =>
-        synchronized { hitCount += 1 }
-        e.df
-      case _ =>
-        if (cur.isDefined) invalidateKey(key)
-        synchronized { missCount += 1 }
-        if (store.size >= maxEntries) store.oldestKey.foreach(invalidateKey)
-        val persisted = df.persist()
-        store.put(key, CachedResult(persisted, now))
-        persisted
+    def live(e: CachedResult) = now - e.createdMs < ttlSeconds * 1000
+    store.get(key).filter(live) match {
+      case Some(e) => hit(); e.df
+      case None =>
+        val mine = Promise[DataFrame]()
+        Option(inFlight.putIfAbsent(key, mine.future)) match {
+          case Some(running) =>
+            val result = Await.result(running, Duration.Inf)
+            hit()
+            result
+          case None =>
+            try {
+              // look again: a miss of this key may have finished in between
+              val result = store.get(key) match {
+                case Some(e) if live(e) => hit(); e.df
+                case cur =>
+                  if (cur.isDefined) invalidateKey(key)
+                  synchronized { missCount += 1 }
+                  val computed = materialize(df)
+                  if (store.size >= maxEntries) store.oldestKey.foreach(invalidateKey)
+                  store.put(key, CachedResult(computed, now))
+                  computed
+              }
+              mine.success(result)
+              result
+            } catch { case t: Throwable => mine.failure(t); throw t }
+            finally inFlight.remove(key)
+        }
     }
   }
+
+  private def hit(): Unit = synchronized { hitCount += 1 }
+
+  /** The cached form of `df`: its rows on the driver when Catalyst sizes it
+    * at or below the cap (or when it already is a local relation), else a
+    * persisted frame. The persisted frame is a new Dataset over the analyzed
+    * plan: `df`'s own plan was optimized before the persist registered, so
+    * its actions would not read the cache.
+    */
+  private def materialize(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    if (onDriver(df) || qe.optimizedPlan.stats.sizeInBytes <= DriverResultMaxBytes)
+      df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    else GraftInternals.ofRows(df.sparkSession, qe.analyzed).persist()
+  }
+
+  /** A driver-local result: released with its last reference, never
+    * unpersisted (which would cost a CacheManager pass for nothing).
+    */
+  private def onDriver(df: DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[LocalRelation]
 
   /** V3: explicit invalidation (delete one key). */
   def invalidate(df: DataFrame): Unit = invalidateKey(fingerprint(df))
 
   private def invalidateKey(key: Long): Unit =
-    store.remove(key).foreach(_.df.unpersist())
+    store.remove(key).foreach(e => if (!onDriver(e.df)) e.df.unpersist())
 
   /** V3: flushall. */
   def clear(): Unit = store.keys.foreach(invalidateKey)
@@ -159,6 +229,11 @@ object ResultCache {
     * granularity — bounds FS metadata calls per fingerprint.
     */
   val MaxStatFiles = 256
+
+  /** Largest result, by Catalyst's estimate, kept on the driver instead of
+    * persisted: 4 MB, so the default 64 entries hold at most ~256 MB.
+    */
+  val DriverResultMaxBytes: BigInt = 4L << 20
 
   /** 64-bit hash combine (boost-style with the splitmix64 constant). */
   private[serve] def mix(a: Long, b: Long): Long =

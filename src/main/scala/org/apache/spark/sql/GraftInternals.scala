@@ -2,22 +2,31 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Compile-time bridge to two `private[sql]` Spark seams graft needs for
-  * session-isolated checkpoint materialization (`graft.Tuning.pinPartitioned`)
-  * and for running a hand-built plan (`graft.quality.Checks.report`'s
-  * one-scan aggregate):
+/** Compile-time bridge to the two `private[sql]` Spark seams graft needs.
+  * It is the only such doorway for whole plans, so its callers are listed
+  * here:
   *
   *  - `SparkSession.cloneSession()` — a fork of the session (same
   *    SparkContext and shared state, COPIED SQLConf), so a conf flip scoped
   *    to one materialization can never race queries planned concurrently on
-  *    the caller's session;
-  *  - `Dataset.ofRows(session, plan)` — re-root an analyzed logical plan
-  *    under a specific session, used to plan the pin under the clone and
-  *    hand the materialized `LogicalRDD` leaf back to the caller's session.
+  *    the caller's session. Caller: `graft.Tuning.pinPartitioned` (its
+  *    cached AQE-off clone).
+  *  - `Dataset.ofRows(session, plan)` — turn a resolved logical plan into a
+  *    `DataFrame` under a given session; it runs the usual analyzer and
+  *    optimizer lazily, like any other query. Callers:
+  *     - `graft.Tuning.pinPartitioned`: plan the pin under the clone and
+  *       hand the materialized `LogicalRDD` leaf back to the caller's
+  *       session;
+  *     - `graft.quality.Checks.report`: the one-scan aggregate over a
+  *       table's filter checks;
+  *     - `graft.plans.AsOfJoinPlan`: the hand-built `GraftAsOfJoin` node;
+  *     - `graft.serve.ResultCache.through`: a fresh frame over an analyzed
+  *       plan for the persisted (above-cap) tier.
   *
-  * Lives in `org.apache.spark.sql` purely for access; the alternative
-  * (runtime reflection) trades a compile-time check for a latent
-  * NoSuchMethodError on a Spark upgrade.
+  * Lives in `org.apache.spark.sql` purely for access (Spark exposes every
+  * other extension hook publicly, but plan construction from outside has no
+  * public spelling); the alternative, runtime reflection, trades a
+  * compile-time check for a latent NoSuchMethodError on a Spark upgrade.
   */
 object GraftInternals {
 

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -153,7 +159,72 @@ class ServeSpec extends AnyFunSuite {
     assert(cache.stats._3 === 0)
   }
 
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
+  /** What a cached result may hold in Spark: the persisted RDDs and whether
+    * the cache manager holds anything.
+    */
+  private def cacheState = (spark.sparkContext.getPersistentRDDs.keySet, cacheManager.isEmpty)
+
+  /** Runs `body` with Catalyst sizing every file scan 10^5 times larger
+    * than its files, which puts a result over a test table above
+    * [[ResultCache.DriverResultMaxBytes]] (the persisted tier).
+    */
+  private def aboveCap[T](body: => T): T = {
+    val factor = "spark.sql.sources.fileCompressionFactor"
+    spark.conf.set(factor, "100000")
+    try body finally spark.conf.unset(factor)
+  }
+
+  private def parquetDir(prefix: String, rows: Seq[(Long, String)]): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile.getAbsolutePath
+    rows.toDF("id", "s").write.mode("overwrite").parquet(dir)
+    dir
+  }
+
+  /** Spark jobs that `body` starts on this thread. Its jobs carry a local
+    * property; a marker job started after it reaches the listener last, so
+    * by then every job of `body` has been seen.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val probe = "graft.test.probe"
+    val jobs = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(probe))) match {
+          case Some("body") => jobs.incrementAndGet()
+          case Some("marker") => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(probe, "body")
+      try body finally sc.setLocalProperty(probe, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "the listener never saw the marker job")
+      jobs.get
+    } finally {
+      sc.setLocalProperty(probe, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("result cache: underlying-data change invalidates within TTL") {
+    aboveCap(dataChangeInvalidates(persisted = true))
+  }
+
+  test("result cache: underlying-data change invalidates within TTL, driver-local tier") {
+    dataChangeInvalidates(persisted = false)
+  }
+
+  /** A cached result is hit while its files are unchanged, however often it
+    * is read, and missed once they change.
+    */
+  private def dataChangeInvalidates(persisted: Boolean): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft-rc").toFile.getAbsolutePath
     Seq((1L, "x")).toDF("id", "s").write.mode("overwrite").parquet(dir)
     val now = 0L
@@ -168,7 +239,10 @@ class ServeSpec extends AnyFunSuite {
     // collected must still hit. Dataset.inputFiles is empty here (CacheManager
     // substitutes the InMemoryRelation), so a version derived from it would
     // flip and miss forever; the analyzed-plan file list is substitution-proof.
-    assert(q.inputFiles.isEmpty, "precondition: cache substitution hides inputFiles")
+    // Only a persisted result is substituted; the driver-local tier must
+    // still hit on the third call.
+    if (persisted)
+      assert(q.inputFiles.isEmpty, "precondition: cache substitution hides inputFiles")
     cache.through(q).collect()
     assert(cache.stats._1 === 2L, "cache stopped hitting after persist")
     // rewrite the table WELL inside TTL: the file-status fold changes the
@@ -180,6 +254,83 @@ class ServeSpec extends AnyFunSuite {
     assert(cache.stats._2 === 2L)
     assert(fresh.head.getLong(1) === 2L, "served stale cached data")
     cache.clear()
+  }
+
+  test("result cache: a small result is served from the driver, a hit runs no Spark job") {
+    val dir = parquetDir("graft-rc-local", Seq((1L, "x"), (2L, "y"), (3L, "x")))
+    def q = spark.read.parquet(dir).groupBy("s").count()
+    val cache = new ResultCache()
+    val before = cacheState
+    val missed = cache.through(q)
+    // the miss ran the query inside `through`: its rows sit on the driver,
+    // nothing was persisted and the cache manager holds nothing new
+    assert(missed.queryExecution.logical.isInstanceOf[LocalRelation])
+    assert(cacheState === before)
+    // built outside the count: reading a parquet directory infers its schema
+    // with a job
+    val again = q
+    var rows: Array[org.apache.spark.sql.Row] = null
+    assert(jobsDuring { rows = cache.through(again).collect() } === 0, "a hit ran Spark jobs")
+    assert(cache.stats === ((1L, 1L, 1)))
+    assert(rows.map(r => (r.getString(0), r.getLong(1))).toSet === Set(("x", 2L), ("y", 1L)))
+    cache.clear()
+    assert(cacheState === before)
+  }
+
+  test("result cache: a result above the cap is persisted, and unpersisted on invalidate and clear") {
+    val dir = parquetDir("graft-rc-big", Seq((1L, "x"), (2L, "y"), (3L, "x")))
+    def q = spark.read.parquet(dir).groupBy("s").count()
+    val cache = new ResultCache()
+    aboveCap {
+      val before = cacheState
+      assert(cache.through(q).collect().length === 2)
+      assert(spark.sparkContext.getPersistentRDDs.size > before._1.size)
+      // the hit reads the persisted blocks, not the files
+      val hit = cache.through(q)
+      hit.collect()
+      assert(hit.queryExecution.optimizedPlan.collectFirst {
+        case r: InMemoryRelation => r
+      }.isDefined, "the persisted result is not read from the cache")
+      assert(cache.stats === ((1L, 1L, 1)))
+      cache.invalidate(q)
+      assert(cacheState === before, "invalidate left the result persisted")
+      cache.through(q).collect()
+      assert(cacheState !== before)
+      cache.clear()
+      assert(cacheState === before, "clear left the result persisted")
+    }
+  }
+
+  test("result cache: concurrent misses of one key run the query once, on both tiers") {
+    for (persisted <- Seq(false, true)) {
+      val dir = parquetDir("graft-rc-once", Seq((1L, "x")))
+      val runs = spark.sparkContext.longAccumulator("query runs")
+      // slow enough that the second caller arrives while the first computes
+      val counted = udf { (id: Long) => runs.add(1); Thread.sleep(500); id }
+        .asNondeterministic()
+      def q = spark.read.parquet(dir).select(counted(col("id")).as("id"))
+      val cache = new ResultCache()
+      def run(): Unit = {
+        val before = cacheState
+        val start = new CountDownLatch(1)
+        val pool = Executors.newFixedThreadPool(2)
+        try {
+          val results = Seq.fill(2)(pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+            def call(): Seq[Long] = {
+              start.await()
+              cache.through(q).collect().map(_.getLong(0)).toSeq
+            }
+          }))
+          start.countDown()
+          assert(results.map(_.get(60, TimeUnit.SECONDS)) === Seq(Seq(1L), Seq(1L)))
+        } finally pool.shutdown()
+        assert(runs.value === 1L, s"the query ran ${runs.value} times (persisted = $persisted)")
+        assert(cache.stats === ((1L, 1L, 1)))
+        cache.clear()
+        assert(cacheState === before, s"clear left a result behind (persisted = $persisted)")
+      }
+      if (persisted) aboveCap(run()) else run()
+    }
   }
 
   test("file-backed store: a second cache instance hits the first's entry") {
