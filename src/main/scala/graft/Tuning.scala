@@ -204,23 +204,22 @@ object Tuning {
     * ~0.2 s per call once the CC loop started pinning every round — the
     * clone's conf never changes after creation, and concurrent actions on
     * one session are safe, so one clone serves every pin. Keyed on the
-    * parent's shuffle-partition setting too: a pin's partition count must
-    * track the session conf (see callers), so a conf change invalidates
-    * the cached clone. WeakHashMap so a dropped session doesn't leak its
-    * clone.
+    * parent's current SQL conf, every entry but the AQE switch: a pin must
+    * plan as the caller's session would (shuffle partitions, broadcast
+    * threshold, codegen), so any conf change invalidates the cached clone. WeakHashMap so a dropped session doesn't leak its clone.
     */
   private val pinSessions =
-    new java.util.WeakHashMap[SparkSession, (String, SparkSession)]()
+    new java.util.WeakHashMap[SparkSession, (Map[String, String], SparkSession)]()
   private def pinSessionFor(parent: SparkSession): SparkSession =
     pinSessions.synchronized {
       import org.apache.spark.sql.GraftInternals
-      val nowPar = parent.conf.get("spark.sql.shuffle.partitions", "")
+      val nowConf = parent.conf.getAll - "spark.sql.adaptive.enabled"
       Option(pinSessions.get(parent)) match {
-        case Some((par, child)) if par == nowPar => child
+        case Some((conf, child)) if conf == nowConf => child
         case _ =>
           val child = GraftInternals.cloneSession(parent)
           child.conf.set("spark.sql.adaptive.enabled", "false")
-          pinSessions.put(parent, (nowPar, child))
+          pinSessions.put(parent, (nowConf, child))
           child
       }
     }

@@ -3,6 +3,8 @@ package graft.graph
 import scala.concurrent.{ExecutionContext, Future}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
 import org.apache.spark.storage.StorageLevel
 
 /** dbt-style model DAG: named models with declared `ref()` dependencies,
@@ -22,10 +24,10 @@ final case class Model(
     materialization: Materialization = View)
 
 sealed trait Materialization
-/** dbt `materialized='view'` → lazy DataFrame (plan only). A view that two
-  * or more models of a graph read is computed once per [[ModelGraph.run]]:
-  * the run caches it for its consumers and releases it when it returns;
-  * outside a run it is recomputed per use, like a SQL view.
+/** dbt `materialized='view'` → lazy DataFrame (plan only). A view read two
+  * or more times in a graph is computed once per [[ModelGraph.run]] (see
+  * its pinning rule); outside a run it is recomputed per use, like a SQL
+  * view.
   */
 case object View extends Materialization
 /** dbt `materialized='table'` → persisted columnar table, optionally
@@ -89,28 +91,48 @@ final class ModelGraph(val models: Seq[Model]) {
     order.result()
   }
 
-  /** Views read by two or more models — the reference's `/*+ MATERIALIZED */`
-    * CTEs (SURVEY.md, fct_balanceSheet.sql:8,10). In [[ModelGraph.edgar]]
-    * each fact joins each dim twice, so an uncached dim subtree would be
-    * recomputed six times per run.
+  /** How many times each model is read: one per `deps` entry that names
+    * it, so a model that joins a dep twice counts it twice.
     */
-  private val sharedViews: Set[String] = models
-    .filter(m => m.materialization == View &&
-      models.count(_.deps.contains(m.name)) >= 2)
-    .map(_.name).toSet
+  private val reads: Map[String, Int] =
+    models.flatMap(_.deps).groupBy(identity).map { case (n, rs) => n -> rs.size }
+
+  /** This graph cut to `target` and its ancestors — dbt's `+model`
+    * selection, for sources that only some of the graph's models resolve
+    * against.
+    */
+  def upTo(target: String): ModelGraph = {
+    require(byName.contains(target), s"unknown model $target")
+    // consumers come after their deps in topo order: walking it backwards
+    // reaches every kept model before its deps
+    val keep = topoOrder.reverse.foldLeft(Set(target)) { (k, n) =>
+      if (k(n)) k ++ byName(n).deps.filter(byName.contains) else k
+    }
+    new ModelGraph(models.filter(m => keep(m.name)))
+  }
 
   /** Build every model against a registry seeded with the source tables.
     * Models at the same topological depth run concurrently (Futures sharing
     * the SparkSession), like dbt threads. Materialization is applied by
     * `materialize` (injected so tests can run fully lazy).
     *
-    * Shared work runs once: the frame `materialize` returns for a View read
-    * by two or more models is persisted, so every downstream build in the
-    * run reads the cached relation instead of recomputing the subtree. The
-    * cache is lazy (filled by the first job that reads it) and released
-    * when `run` returns, on success and on failure; the returned frames and
-    * temp views keep their full lineage and recompute once released. A
-    * frame that is already cached when it is built is left as it is.
+    * Shared work runs once — the reference's `/*+ MATERIALIZED */` CTEs
+    * (SURVEY.md, fct_balanceSheet.sql:8,10). A model read two or more times
+    * across the graph's `deps` is pinned, and every downstream build in the
+    * run reads the pin instead of recomputing the subtree. A frame that
+    * `materialize` returned already cached, or as a bare scan (a one-leaf
+    * plan: a written table's read-back, a checkpoint), is left as it is:
+    * reading it again costs no more than reading a pin.
+    *
+    * `keepPins` chooses how long a pin lives:
+    *  - `false` (the product path): `persist()`, filled by the first job
+    *    that reads it and released when `run` returns, on success and on
+    *    failure. The returned frames and temp views keep their full lineage
+    *    and recompute once released.
+    *  - `true`, for callers that consume the outputs after `run` returns:
+    *    an eager `localCheckpoint`, held by the returned registry. No
+    *    CacheManager entry is made; the ContextCleaner reclaims the blocks
+    *    once the frames are dropped.
     *
     * A failing model fails the run only after every model of its wave has
     * ended, so no model of a failed run is still building (or writing its
@@ -119,7 +141,8 @@ final class ModelGraph(val models: Seq[Model]) {
     */
   def run(sources: Map[String, DataFrame],
           materialize: (Model, DataFrame) => DataFrame = (_, df) => df,
-          parallelism: Int = 8)(implicit spark: SparkSession): Map[String, DataFrame] = {
+          parallelism: Int = 8,
+          keepPins: Boolean = false)(implicit spark: SparkSession): Map[String, DataFrame] = {
     val external = models.flatMap(m => m.deps.filterNot(byName.contains)).distinct
     val missing = external.filterNot(sources.contains)
     require(missing.isEmpty,
@@ -138,13 +161,18 @@ final class ModelGraph(val models: Seq[Model]) {
         val reg = registry
         val built = graft.Tuning.awaitAll(wave.map { n =>
           val m = byName(n)
-          Future(n -> materialize(m, m.build(reg)))
+          Future {
+            val df = materialize(m, m.build(reg))
+            val pin =
+              if (reads.getOrElse(n, 0) < 2 || df.storageLevel != StorageLevel.NONE ||
+                  EliminateSubqueryAliases(df.queryExecution.analyzed).isInstanceOf[LeafNode]) None
+              else if (keepPins) Some(df.localCheckpoint())
+              else Some(df.persist())
+            (n, pin.getOrElse(df), pin)
+          }
         })
-        built.foreach { case (n, df) =>
-          if (sharedViews(n) && df.storageLevel == StorageLevel.NONE)
-            pinned = df.persist() :: pinned
-        }
-        registry = registry ++ built
+        pinned = built.flatMap(_._3).toList ::: pinned
+        registry = registry ++ built.map { case (n, df, _) => n -> df }
         remaining = remaining.drop(wave.size)
       }
       registry
@@ -152,7 +180,7 @@ final class ModelGraph(val models: Seq[Model]) {
       pool.shutdown()
       // newest first: a pin released before the pins built on it would
       // make the cache manager re-plan those dependents for nothing
-      pinned.foreach(_.unpersist())
+      if (!keepPins) pinned.foreach(_.unpersist())
     }
   }
 }
@@ -160,9 +188,17 @@ final class ModelGraph(val models: Seq[Model]) {
 object ModelGraph {
   /** The reference's full star-schema + document-model graph
     * (SURVEY.md §3.2, §7.1). Sources: raw `sub`, `tag`, `num`, `pre`.
+    * `facts` names each fact model and its statement type; the default is
+    * the reference's three.
     */
-  def edgar(spark: SparkSession, rowCap: Option[Int] = Some(100000)): ModelGraph = {
+  def edgar(spark: SparkSession, rowCap: Option[Int] = Some(100000),
+            facts: Seq[(String, String)] = Seq("fct_balanceSheet" -> "BS",
+              "fct_IncomeStatement" -> "IS", "fct_Cashflows" -> "CF")): ModelGraph = {
     import graft.models._
+    // a fact joins each dim twice (the SK lookup, then the join-back), and
+    // names each read: `run` pins by reads
+    val factDeps = Seq("stg_num", "stg_pre", "stg_sub", "dim_company", "dim_filings",
+      "dim_date", "dim_company", "dim_filings")
     new ModelGraph(Seq(
       Model("stg_sub", Seq("sub"), r => Staging.stgSub(r("sub"))),
       Model("stg_num", Seq("num"), r => Staging.stgNum(r("num")),
@@ -174,16 +210,12 @@ object ModelGraph {
         r => Dims.dimCompany(r("dim_address"), r("stg_sub"))),
       Model("dim_filings", Seq("stg_pre", "stg_tag", "stg_num", "stg_sub"),
         r => Dims.dimFilings(r("stg_pre"), r("stg_tag"), r("stg_num"), r("stg_sub"))),
-      Model("dim_date", Nil, _ => Dims.dimDate(spark)),
-      Model("fct_balanceSheet",
-        Seq("stg_num", "stg_pre", "stg_sub", "dim_company", "dim_filings", "dim_date"),
-        r => Facts.fctBalanceSheet(r, rowCap), Table(clusterBy = Seq("COMPANY_NAME"))),
-      Model("fct_IncomeStatement",
-        Seq("stg_num", "stg_pre", "stg_sub", "dim_company", "dim_filings", "dim_date"),
-        r => Facts.fctIncomeStatement(r, rowCap), Table(clusterBy = Seq("COMPANY_NAME"))),
-      Model("fct_Cashflows",
-        Seq("stg_num", "stg_pre", "stg_sub", "dim_company", "dim_filings", "dim_date"),
-        r => Facts.fctCashflows(r, rowCap), Table(clusterBy = Seq("COMPANY_NAME"))),
+      Model("dim_date", Nil, _ => Dims.dimDate(spark))) ++
+      facts.map { case (name, stmt) =>
+        Model(name, factDeps, r => Facts.buildFact(stmt, r("stg_num"), r("stg_pre"),
+          r("stg_sub"), r("dim_company"), r("dim_filings"), r("dim_date"), rowCap),
+          Table(clusterBy = Seq("COMPANY_NAME")))
+      } ++ Seq(
       Model("raw_stg_sub_modified", Seq("sub"),
         r => JsonModels.rawStgSubModified(r("sub"))),
       Model("stg_financial_data", Seq("raw_stg_sub_modified", "num", "tag", "pre"),

@@ -79,85 +79,33 @@ object ComposedPipeline {
     Map("sub" -> sub, "num" -> num, "pre" -> pre, "tag" -> tag)
   }
 
-  /** staging → dims → buildFact("R"), FCT_VALUE emitted as double (the sum
-    * itself is exact decimal; the cast is only for the hash compare).
+  /** staging → dims → buildFact("R") as the product runs it:
+    * [[graft.graph.ModelGraph.edgar]] with the one fact, cut to that fact
+    * and its ancestors (the JSON models read raw columns this mapping does
+    * not have). FCT_VALUE is emitted as double (the sum itself is exact
+    * decimal; the cast is only for the hash compare).
     *
-    * The two dims are materialized (`localCheckpoint`): the fact consumes
-    * each dim TWICE (SK left-join, then the attribute join-back), and with
-    * no materialization the two uses are separate broadcast builds over
-    * separate recomputes of the full dim DAG — Catalyst cannot reuse a
-    * broadcast across different join keys. This mirrors the reference
-    * exactly: dbt materializes dimensions as TABLES and the fact models
-    * read the materialized relations (masterfindata/models/Dimensions/
-    * *.sql + dbt_project.yml). localCheckpoint rather than `persist()`:
-    * checkpoint blocks are RDD-scoped and reclaimed by the ContextCleaner
-    * once the query's plan is garbage-collected, whereas CacheManager
-    * entries from persist() are held for the session's lifetime — a
-    * per-request leak in a long-lived serve session.
+    * The run keeps its pins (`localCheckpoint`): the fact is consumed after
+    * `run` returns, it joins each dim twice, and the staging models feed
+    * both dims and the fact, so released pins would recompute them per
+    * read. This
+    * mirrors the reference, where dbt materializes the dimensions as tables
+    * and the facts read the stored relations.
     */
-  def composedFact(s: SparkSession, dir: String): DataFrame = {
-    import graft.graph.{Model, ModelGraph, Table}
-    // The SAME wave-parallel runner the EDGAR pipeline uses (ModelGraph:
-    // topo order, independent models built concurrently on a managed pool),
-    // with materialization injected as `localCheckpoint` — the in-session
-    // analog of dbt's table materialization. Staging and dims are
-    // `Table`-marked: each feeds 2-4 downstream consumers, and the
-    // checkpoint replaces the repeated scan+join+cleansing subtree with a
-    // LogicalRDD leaf — the recompute AND the per-consumer analysis/codegen
-    // of the subtree both disappear (measured ~2 s at sf0.1; checkpoint
-    // blocks are ContextCleaner-reclaimed, unlike persist()'s CacheManager
-    // entries, so serve-session requests don't accumulate state).
-    // dim_date starts 1992: TPC-H order dates are 1992-1998; the default
-    // 2000 calendar would left-join to nothing and leave that branch dead.
-    val g = new ModelGraph(Seq(
-      Model("stg_sub", Seq("sub"), r => Staging.stgSub(r("sub")), Table()),
-      Model("stg_num", Seq("num"), r => Staging.stgNum(r("num")), Table()),
-      Model("stg_pre", Seq("pre"), r => Staging.stgPre(r("pre")), Table()),
-      Model("stg_tag", Seq("tag"), r => Staging.stgTag(r("tag"))),
-      Model("dim_address", Seq("stg_sub"), r => Dims.dimAddress(r("stg_sub"))),
-      Model("dim_company", Seq("dim_address", "stg_sub"),
-        r => Dims.dimCompany(r("dim_address"), r("stg_sub")), Table()),
-      Model("dim_filings", Seq("stg_pre", "stg_tag", "stg_num", "stg_sub"),
-        r => Dims.dimFilings(r("stg_pre"), r("stg_tag"), r("stg_num"), r("stg_sub")),
-        Table()),
-      Model("dim_date", Nil, _ => Dims.dimDate(s, start = "1992-01-01")),
-      Model("fct", Seq("stg_num", "stg_pre", "stg_sub",
-          "dim_company", "dim_filings", "dim_date"),
-        r => Facts.buildFact("R", r("stg_num"), r("stg_pre"), r("stg_sub"),
-          r("dim_company"), r("dim_filings"), r("dim_date"), rowCap = None))))
-    // Project each staging pin to the union of the columns its downstream
-    // consumers actually read BEFORE checkpointing (guide §6, scan
-    // narrowing): the full stg_sub pin carried four columns nothing reads
-    // (CITYBA, BAPH, ACCEPTED, Ticker — dim_company re-derives Ticker from
-    // INSTANCE), stg_num five (VERSION, DDATE, QTRS, FOOTNOTE) and stg_pre
-    // two (VERSION, PLABEL). A projection cannot change the row multiset,
-    // so every consumer sees identical data — it only shrinks the
-    // materialized blocks and the per-consumer scan width. The dim pins are
-    // NOT projected: both are DISTINCT outputs, where dropping a column
-    // could collapse rows and change join multiplicity.
-    val pinCols: Map[String, Seq[String]] = Map(
-      "stg_sub" -> Seq("ADSH", "CIK", "NAME", "COUNTRYBA", "STPRBA", "ZIPBA",
-        "BAS1", "BAS2", "FILED", "INSTANCE"),
-      "stg_num" -> Seq("ADSH", "TAG", "UOM", "VALUE", "VERSION_TAG"),
-      "stg_pre" -> Seq("ADSH", "STMT", "TAG", "VERSION_TAG"))
-    val registry = g.run(rawTables(s, dir), materialize = {
-      case (m, df) if m.materialization.isInstanceOf[Table] =>
-        pinCols.get(m.name).fold(df)(cs => df.select(cs.map(col): _*))
-          .localCheckpoint()
-      case (_, df) => df
-    })(s)
-    registry("fct")
+  def composedFact(s: SparkSession, dir: String): DataFrame =
+    graft.graph.ModelGraph.edgar(s, rowCap = None, facts = Seq("fct" -> "R")).upTo("fct")
+      .run(rawTables(s, dir), keepPins = true)(s)("fct")
       .select(col("FCT_VALUE").cast("double").as("FCT_VALUE"),
         col("COMPANY_NAME"), col("FILEDDATE"), col("STATEMENTTYPE"),
         col("TAG"), col("UNITOFMEASURE"), col("VERSION"))
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "edgar_fact_composed" -> ((s, dir) => composedFact(s, dir)))
 
   /** DuckDB transliteration of the same dataflow. dim_date is omitted: its
     * left join is 1:1-at-most on a unique calendar key and no DATE_SK column
-    * reaches the output, so it cannot change rows. DOC is omitted from
+    * reaches the output, so it cannot change rows (its 2000-based calendar
+    * matches none of the 1992-1998 order dates). DOC is omitted from
     * dim_filings' DISTINCT: it is the constant 'Unknown' here.
     */
   def oracles: Map[String, String] = Map(

@@ -80,8 +80,10 @@ object Dims {
       .distinct()
   }
 
-  /** dim_date (reference: dim_date.sql:7-33) — 11,323-day calendar from
-    * 2000-01-01. Built from `spark.range` instead of
+  /** dim_date (reference: dim_date.sql:7-33) — 11,323-day calendar from the
+    * reference's fixed 2000-01-01 start. The facts left-join it, so a filing
+    * date outside it only leaves DATE_SK null, and DATE_SK never reaches a
+    * fact's output. Built from `spark.range` instead of
     * `GENERATOR(ROWCOUNT)+ROW_NUMBER() OVER (ORDER BY NULL)` (W1/W2): same
     * rows, no single-partition window.
     *
@@ -91,10 +93,9 @@ object Dims {
     * `false` gives the corrected Sat+Sun flag.
     */
   def dimDate(spark: SparkSession, rowCount: Int = 11323,
-              compatWeekendBug: Boolean = true,
-              start: String = "2000-01-01"): DataFrame = {
+              compatWeekendBug: Boolean = true): DataFrame = {
     val base = spark.range(rowCount)
-      .select(date_add(to_date(lit(start)), col("id").cast("int")).as("FULL_DT"))
+      .select(date_add(to_date(lit("2000-01-01")), col("id").cast("int")).as("FULL_DT"))
     val dow = dayofweek(col("FULL_DT")) - lit(1) // Snowflake DOW: 0=Sun..6=Sat
     val weekend =
       if (compatWeekendBug) when(dow.isin(6, 7), "Y").otherwise("N")

@@ -95,21 +95,4 @@ object Facts {
       .select("FCT_VALUE", "COMPANY_NAME", "FILEDDATE", "STATEMENTTYPE",
         "TAG", "UNITOFMEASURE", "VERSION")
   }
-
-  def fctBalanceSheet(models: Map[String, DataFrame],
-                      rowCap: Option[Int] = Some(100000)): DataFrame =
-    fromRegistry("BS", models, rowCap)
-
-  def fctIncomeStatement(models: Map[String, DataFrame],
-                         rowCap: Option[Int] = Some(100000)): DataFrame =
-    fromRegistry("IS", models, rowCap)
-
-  def fctCashflows(models: Map[String, DataFrame],
-                   rowCap: Option[Int] = Some(100000)): DataFrame =
-    fromRegistry("CF", models, rowCap)
-
-  private def fromRegistry(stmt: String, m: Map[String, DataFrame],
-                           rowCap: Option[Int]): DataFrame =
-    buildFact(stmt, m("stg_num"), m("stg_pre"), m("stg_sub"),
-      m("dim_company"), m("dim_filings"), m("dim_date"), rowCap)
 }

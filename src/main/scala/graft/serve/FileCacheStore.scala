@@ -71,9 +71,12 @@ final class FileCacheStore(spark: SparkSession, rootDir: String) extends CacheSt
     invalidateListing()
   }
 
+  /** Drops the key here and in the shared directory. Returns only this
+    * process's handle: another process's entry is deleted, not rehydrated
+    * (a read job for a frame nobody will read).
+    */
   override def remove(key: Long): Option[CachedResult] = {
-    val prior = get(key)
-    local.remove(key)
+    val prior = Option(local.remove(key))
     fs.delete(metaPath(key), false)
     fs.delete(dataPath(key), true)
     invalidateListing()

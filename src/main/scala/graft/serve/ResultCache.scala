@@ -26,8 +26,8 @@ final case class CachedResult(df: DataFrame, createdMs: Long)
   * createdMs) in any shared KV and rehydrates with `spark.read` — the
   * ResultCache logic (fingerprinting, tiers, TTL, eviction, stats) is
   * unchanged either way, which is the point of the seam. A store holds
-  * either tier's handle as it is given; `remove` hands it back so the cache
-  * can release a persisted one.
+  * either tier's handle as it is given; `remove` hands back this process's
+  * handle, if it has one, so the cache can release a persisted one.
   */
 trait CacheStore {
   def get(key: Long): Option[CachedResult]

@@ -386,6 +386,18 @@ class ServeSpec extends AnyFunSuite {
     assert(store.keys.isEmpty, "local remove not visible through cached listing")
   }
 
+  test("file-backed store: removing another store's key runs no job and deletes its files") {
+    import graft.serve.{CachedResult, FileCacheStore}
+    val storeDir = java.nio.file.Files.createTempDirectory("graft-fcs-r").toFile
+    new FileCacheStore(spark, storeDir.toString).put(9L, CachedResult(Seq((1L, "x")).toDF("id", "s"), 123L))
+    assert(new java.io.File(storeDir, "k9").exists && new java.io.File(storeDir, "k9.meta").exists)
+    val other = new FileCacheStore(spark, storeDir.toString)
+    var prior: Option[CachedResult] = None
+    assert(jobsDuring { prior = other.remove(9L) } === 0, "remove read the entry it deletes")
+    assert(prior.isEmpty, "another process's entry came back as a local handle")
+    assert(!new java.io.File(storeDir, "k9").exists && !new java.io.File(storeDir, "k9.meta").exists)
+  }
+
   test("native expressions are SQL-callable after registration") {
     graft.functions.GraftFunctions.register(spark)
     val n = spark.sql(

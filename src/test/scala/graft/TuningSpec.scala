@@ -79,6 +79,23 @@ class TuningSpec extends AnyFunSuite {
     } finally spark.catalog.dropTempView(view)
   }
 
+  test("pinPartitioned plans with the caller's current conf, not the clone's first copy") {
+    // a broadcast join keeps the streamed side's 7 splits; with broadcasts
+    // off it is a sort-merge join over the 4 shuffle partitions
+    val q = spark.range(0, 1000, 1, 7).toDF("k").join(spark.range(0, 100, 1, 3).toDF("k"), "k")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    try {
+      val first = Tuning.pinPartitioned(q)
+      assert(first.rdd.getNumPartitions === 7)
+      spark.conf.set(key, "-1")
+      val second = Tuning.pinPartitioned(q)
+      assert(second.rdd.getNumPartitions === 4, "the pin planned with a stale broadcast threshold")
+      assert(second.count() === 100L)
+      Seq(first, second).foreach(Tuning.freeCheckpoint)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("concurrently divides the arm share; fanout/availableCores honor it") {
     assert(Tuning.currentArmShare === 1)
     val base = Tuning.availableCores(spark)

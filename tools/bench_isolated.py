@@ -12,6 +12,11 @@ JVM (Bench already unpersists + GCs + min-of-Ns per entry inside a run).
 Usage:
   python3 tools/bench_isolated.py [--sf DIR] [--chunk N] [--runs N]
                                   [--cpus N] [--out FILE]
+                                  [--only NAME[,NAME...]]
+
+--only times just the named entries, chunked like the full battery; it
+defaults to $SPARK_GRAFT_ONLY, so a per-entry before/after pair is the same
+command run in two checkouts. A name no chunk timed is an error record.
 
 Output: one JSON object, same schema as graft.Bench's line (queries /
 metrics / errors / error_count / sf) plus protocol metadata, written to
@@ -60,14 +65,13 @@ def main():
     # local[32] and the slope baselines (r15 verdict task #6: a 16-cpu
     # canonical record confounded isolated-to-isolated comparisons)
     ap.add_argument("--out", default="BENCH_LOCAL_isolated.json")
-    ap.add_argument("--only", default=None,
-                    help="comma-separated subset (skips listing)")
+    ap.add_argument("--only", default=os.environ.get("SPARK_GRAFT_ONLY"),
+                    help="comma-separated subset (skips listing); "
+                         "default $SPARK_GRAFT_ONLY")
     args = ap.parse_args()
 
-    if args.only:
-        names = sorted(n for n in args.only.split(",") if n.strip())
-    else:
-        names = list_entries(args.cpus)
+    names = sorted({n.strip() for n in (args.only or "").split(",")} - {""}) \
+        or list_entries(args.cpus)
     chunks = [names[i:i + args.chunk] for i in range(0, len(names), args.chunk)]
     print(f"[bench_isolated] {len(names)} entries in {len(chunks)} chunks "
           f"of <= {args.chunk}, runs={args.runs}, sf={args.sf}", file=sys.stderr)
@@ -105,6 +109,10 @@ def main():
         print(f"[bench_isolated] chunk {i + 1}/{len(chunks)} done "
               f"({done}/{len(names)} entries, {time.time() - t0:.0f}s elapsed)",
               file=sys.stderr)
+
+    for n in names:
+        if n not in queries and n not in errors:
+            errors[n] = "not timed: no battery entry has this name"
 
     record = {
         "metric": "total",
