@@ -206,10 +206,13 @@ object Tuning {
     * one session are safe, so one clone serves every pin. Keyed on the
     * parent's current SQL conf, every entry but the AQE switch: a pin must
     * plan as the caller's session would (shuffle partitions, broadcast
-    * threshold, codegen), so any conf change invalidates the cached clone. WeakHashMap so a dropped session doesn't leak its clone.
+    * threshold, codegen), so any conf change invalidates the cached clone.
+    * A clone holds its parent session, so it lives as long as its parent's
+    * JVM: one clone per session that ever pinned (in practice one per
+    * application), never collected.
     */
   private val pinSessions =
-    new java.util.WeakHashMap[SparkSession, (Map[String, String], SparkSession)]()
+    new java.util.IdentityHashMap[SparkSession, (Map[String, String], SparkSession)]()
   private def pinSessionFor(parent: SparkSession): SparkSession =
     pinSessions.synchronized {
       import org.apache.spark.sql.GraftInternals

@@ -1,6 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftInternals, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.plans.logical.RebalancePartitions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -16,10 +18,20 @@ import graft.graph.{Bucketed, Incremental, Materialization, MergeInc, Model, Par
   *    incremental) → read back with the schema just written (no
   *    schema-inference job); an incremental write infers its target's
   *    schema once, to find the watermark.
-  *  - table → parquet under `warehouseDir`, `cluster_by` mapped to
-  *    `repartition(keys).sortWithinPartitions(keys)` (SURVEY.md §4) so files
-  *    are clustered for downstream min/max pruning — the Spark analog of
-  *    Snowflake clustering keys.
+  *  - table → parquet under `warehouseDir`, `cluster_by` mapped to a
+  *    rebalance on the keys, then `sortWithinPartitions(keys)` (SURVEY.md
+  *    §4), so files are clustered for downstream min/max pruning — the
+  *    Spark analog of Snowflake clustering keys. The file count is sized
+  *    from measured bytes: under AQE the rebalance shuffle starts at
+  *    `clusterPartitions` partitions and is coalesced to the advisory
+  *    partition size (`spark.sql.adaptive.advisoryPartitionSizeInBytes`),
+  *    so a table of a few hundred rows lands as one file, not
+  *    `clusterPartitions` files that every later read opens with a task
+  *    each. `clusterPartitions` is therefore a cap; the one exception is
+  *    AQE's rebalance skew rule, which splits a single partition above the
+  *    advisory size into sorted slices. With AQE off the write lands as
+  *    exactly `clusterPartitions` hash partitions, as a plain
+  *    `repartition(n, keys)` would.
   *  - incremental → append rows with `watermark >= max(existing watermark)`
   *    (reference: json_transform/macros/incremental_filter.sql:1-5 — note the
   *    `>=` re-processes the boundary value; preserved as-is, SURVEY.md §7.4#7).
@@ -40,7 +52,9 @@ final class Materializer(spark: SparkSession, warehouseDir: String,
       case Table(clusterBy, format) =>
         val out =
           if (clusterBy.isEmpty) df
-          else df.repartition(clusterPartitions, clusterBy.map(col): _*)
+          else GraftInternals.ofRows(df.sparkSession, RebalancePartitions(
+              clusterBy.map(UnresolvedAttribute.quotedString),
+              df.queryExecution.analyzed, Some(clusterPartitions)))
             .sortWithinPartitions(clusterBy.map(col): _*)
         out.write.mode("overwrite").format(format).save(path(name))
         val back = readBack(path(name), format, out.schema, Nil)

@@ -22,6 +22,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *     - `graft.plans.AsOfJoinPlan`: the hand-built `GraftAsOfJoin` node;
   *     - `graft.serve.ResultCache.through`: a fresh frame over an analyzed
   *       plan for the persisted (above-cap) tier.
+  *     - `graft.io.Materializer` (`Table` with `clusterBy`): the
+  *       `RebalancePartitions` node with a partition count, which has no
+  *       public spelling (the `rebalance` hint is dropped with AQE off).
   *
   * Lives in `org.apache.spark.sql` purely for access (Spark exposes every
   * other extension hook publicly, but plan construction from outside has no

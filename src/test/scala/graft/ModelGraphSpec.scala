@@ -129,20 +129,20 @@ class ModelGraphSpec extends AnyFunSuite {
       ("stg_num", Set("num"), Table(clusterBy = Seq("ADSH", "TAG", "VERSION_TAG"))),
       ("stg_tag", Set("tag"), View),
       ("stg_pre", Set("pre"), View),
-      ("dim_address", Set("stg_sub"), View),
-      ("dim_company", Set("dim_address", "stg_sub"), View),
-      ("dim_filings", Set("stg_pre", "stg_tag", "stg_num", "stg_sub"), View),
-      ("dim_date", Set(), View),
+      ("dim_address", Set("stg_sub"), Table()),
+      ("dim_company", Set("dim_address", "stg_sub"), Table()),
+      ("dim_filings", Set("stg_pre", "stg_tag", "stg_num", "stg_sub"), Table()),
+      ("dim_date", Set(), Table()),
       ("fct_balanceSheet", fact, factTable),
       ("fct_IncomeStatement", fact, factTable),
       ("fct_Cashflows", fact, factTable),
       ("raw_stg_sub_modified", Set("sub"), View),
       ("stg_financial_data", Set("raw_stg_sub_modified", "num", "tag", "pre"), View),
-      ("financial_statements_json", Set("stg_financial_data"), View))
+      ("financial_statements_json", Set("stg_financial_data"), Table()))
     val g = ModelGraph.edgar(spark)
     assert(g.models.map(m => (m.name, m.deps.toSet, m.materialization)) === want)
-    assert(pinnedIn(g, materializer(_, _), keepPins = false) ===
-      Set("stg_sub", "stg_pre", "dim_company", "dim_filings", "dim_date"))
+    // the dims are read back as bare scans, which `run` never pins
+    assert(pinnedIn(g, materializer(_, _), keepPins = false) === Set("stg_sub", "stg_pre"))
 
     val composed = ModelGraph.edgar(spark, rowCap = None, facts = Seq("fct" -> "R")).upTo("fct")
     assert(composed.models.map(_.name).toSet ===

@@ -9,7 +9,8 @@ import graft.io.{CsvIo, Materializer}
 import graft.operators.SkewJoin
 
 /** Scale-technique specs: salted skew joins, bucketed (shuffle-free) joins,
-  * incremental materialization, and the CSV weather path.
+  * incremental materialization, clustered table files sized from measured
+  * bytes, and the CSV weather path.
   */
 class ScaleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -204,6 +205,48 @@ class ScaleSpec extends AnyFunSuite {
     // the files on disk are ORC, not parquet
     val files = new java.io.File(s"$dir/nation_orc").listFiles()
     assert(files.exists(_.getName.endsWith(".orc")), files.mkString(","))
+  }
+
+  /** Writes `rows` rows (two keys and a 64-character payload) as a `Table`
+    * clustered on the keys with `clusterPartitions = 4`, in a new session
+    * carrying `conf`, and returns how many files it wrote. The table must
+    * hold exactly the input rows, and each file must be sorted on the keys.
+    */
+  private def clusteredFiles(rows: Long, conf: (String, String)*): Int = {
+    val s = spark.newSession()
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    val dir = java.nio.file.Files.createTempDirectory("cluster-wh").toString
+    val df = s.range(0, rows, 1, 4).select((col("id") * 7919 % 97).as("k"),
+      (col("id") % 5).cast("string").as("tag"), sha2(col("id").cast("string"), 256).as("payload"))
+    val back = new Materializer(s, dir, clusterPartitions = 4)
+      .materialize("clustered", df, Table(clusterBy = Seq("k", "tag")))
+    assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
+    val files = new java.io.File(s"$dir/clustered").listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet"))
+    files.foreach { f =>
+      val keys = s.read.parquet(f).select("k", "tag").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(keys === keys.sorted, s"$f is not sorted on the keys")
+    }
+    files.length
+  }
+
+  test("clustered Table under AQE: a small frame lands as one file") {
+    assert(clusteredFiles(300) === 1)
+  }
+
+  test("clustered Table with AQE off: exactly clusterPartitions files") {
+    assert(clusteredFiles(300, "spark.sql.adaptive.enabled" -> "false") === 4)
+  }
+
+  test("clustered Table above the advisory partition size: 2 to clusterPartitions files") {
+    // 40000 rows shuffle more than the advisory size, while each of the 4
+    // hash partitions stays below it (AQE would split a larger one). With
+    // parallelism first off, the advisory size alone sizes the files.
+    val n = clusteredFiles(40000,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1536k",
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
+    assert(n >= 2 && n <= 4, s"$n files")
   }
 
   test("blocked-pairs block count grows with the corpus under a fixed memory budget") {

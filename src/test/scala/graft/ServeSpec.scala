@@ -6,9 +6,13 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.graph.ModelGraph
+import graft.io.{Materializer, TsvReader}
 import graft.serve.{Engine, Eq, NumBetween, ResultCache}
 
 class ServeSpec extends AnyFunSuite {
@@ -275,6 +279,28 @@ class ServeSpec extends AnyFunSuite {
     assert(rows.map(r => (r.getString(0), r.getLong(1))).toSet === Set(("x", 2L), ("y", 1L)))
     cache.clear()
     assert(cacheState === before)
+  }
+
+  test("serving a stored EDGAR model: a miss runs one Spark job over one parquet relation") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve-wh").toString
+    ModelGraph.edgar(spark).run(TsvReader.readAll(spark, TestSpark.edgarFixtures),
+      new Materializer(spark, dir, 4).apply)(spark)
+    val e = new Engine(spark, Some(new ResultCache()))
+    Seq("dim_company" -> "Company_SK", "financial_statements_json" -> "filing_id").foreach {
+      case (model, key) =>
+        val relations = new Engine(spark).select(model, orderBy = Seq(key), limit = 10)
+          .queryExecution.analyzed.collect { case r: LogicalRelation => r.relation }
+        assert(relations.size === 1, s"$model reads ${relations.size} relations")
+        assert(relations.forall {
+          case h: HadoopFsRelation => h.fileFormat.isInstanceOf[ParquetFileFormat]
+          case _ => false
+        }, s"$model does not read parquet")
+        var page: Array[org.apache.spark.sql.Row] = null
+        assert(jobsDuring {
+          page = e.select(model, orderBy = Seq(key), limit = 10).collect()
+        } === 1, s"a miss on $model")
+        assert(page.nonEmpty)
+    }
   }
 
   test("result cache: a result above the cap is persisted, and unpersisted on invalidate and clear") {
