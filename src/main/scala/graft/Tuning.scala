@@ -132,6 +132,15 @@ object Tuning {
     * (`spark.graft.pin.memBudgetFraction`, default 0.05 — at 16 GB that is
     * ~800 MB, so the sf10 shape still goes to disk and every battery scale
     * stays in memory), not a constant tuned for either environment.
+    *
+    * Caveats of the cluster budget: it counts the executors registered at
+    * the call, so under dynamic allocation at app start (none registered
+    * yet) the floor budgets one executor's pool, and pins are sent to disk
+    * more eagerly than the cluster will need; and it is
+    * `spark.executor.memory` × `spark.memory.fraction`, ignoring
+    * `spark.memory.storageFraction` and off-heap memory. This only picks a
+    * storage level, never a result. `spark.graft.pin.memBudgetBytes`
+    * overrides the whole derivation.
     */
   def pinLevel(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.storage.StorageLevel = {

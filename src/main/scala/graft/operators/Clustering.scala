@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Duplicate-cluster resolution: near-dup PAIRS (from any Dedup operator) →
   * connected components → one cluster id (= min member id) per document.
@@ -285,7 +284,7 @@ object Clustering {
         Dedup.minhashLshPairs(dd, threshold).select(col("id_a"), col("id_b")))
         .localCheckpoint(),
       () => connectedComponents(
-        Dedup.ngramJaccardPairsAdaptive(dd, threshold)
+        Dedup.jaccardPairs(dd, threshold)
           .select(col("id_a"), col("id_b")))
         .localCheckpoint()))
     val (lshCC, exactCC) = (ccs(0), ccs(1))
@@ -962,7 +961,7 @@ object Clustering {
     // duplicate clusters; cluster_id doubles as the survivor id
     "dedup_clusters" -> ((s, dir) =>
       connectedComponents(
-        Dedup.ngramJaccardPairsAdaptive(
+        Dedup.jaccardPairs(
           graft.Tables(s, dir, "documents"), threshold = 0.8)
           .select(col("id_a"), col("id_b")))),
 

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFns
@@ -14,10 +13,16 @@ import graft.functions.VectorFns
   *  - Exact dedup is one hash aggregation on the fingerprint — shuffles once
   *    on the hash, never on the text.
   *  - The brute-force pairwise Jaccard exists as the *oracle baseline*; its
-  *    O(N²) self-join is only run at verification scale. The production path
-  *    is MinHash banding: one codegen'd band-key pass per document, a bucket
-  *    self-join on the band keys, and only colliding pairs verified — the
-  *    standard way this stays tractable at billions of documents.
+  *    O(N²) self-join is only run at verification scale. [[ngramJaccardPairs]]
+  *    is its declarative SQL reference, and [[jaccardPrefixPairs]] the exact
+  *    prefix-filtered join. Every other exact pair scan — [[jaccardPairs]],
+  *    [[cosinePairs]] and the near-dup tier of [[incrementalDedup]] — runs on
+  *    the one all-pairs executor, [[AllPairs]]: broadcast while the side it
+  *    would broadcast is estimated at ≤ 64 MB, Afrati–Ullman blocked above
+  *    that, with the same rows either way. The production path is MinHash
+  *    banding: one codegen'd band-key pass per document, a bucket self-join
+  *    on the band keys, and only colliding pairs verified — the standard way
+  *    this stays tractable at billions of documents.
   *  - SimHash reduces each doc to 64 bits; candidate pairs come from exact
   *    16-bit band matches (hamming ≤ 3 guarantees ≥ one exact band by
   *    pigeonhole over 4 bands).
@@ -121,7 +126,9 @@ object Dedup {
     * The `<` condition forces a nested-loop join with one side broadcast; the
     * streamed side MUST be repartitioned first — a small input is often one
     * parquet split, and a single-partition NL join runs the whole O(N²) on
-    * one core (measured: 16× slowdown at sf0.1).
+    * one core (measured: 16× slowdown at sf0.1). Two docs without a shingle
+    * (shorter than 3 chars) score 0/0: `try_divide` makes that NULL, as in
+    * the DuckDB oracle, where a plain divide throws under ANSI mode.
     */
   def ngramJaccardPairs(d: DataFrame, threshold: Double): DataFrame = {
     val par = graft.Tuning.fanout(d.sparkSession)
@@ -133,7 +140,7 @@ object Dedup {
         graft.functions.SortedIntersectSize(col("a.g"), col("b.g")).as("i"),
         (col("a.sz") + col("b.sz")).as("ab"))
       .select(col("id_a"), col("id_b"),
-        round(col("i").cast("double") / (col("ab") - col("i")), 4).as("jac"))
+        round(try_divide(col("i").cast("double"), col("ab") - col("i")), 4).as("jac"))
       .filter(col("jac") >= threshold)
   }
 
@@ -714,116 +721,51 @@ object Dedup {
     nStrong.crossJoin(notInExact).crossJoin(missed).crossJoin(hygiene)
   }
 
-  /** All-pairs embedding cosine ≥ threshold — a broadcast numeric kernel.
-    *
-    * A declarative nested-loop pair join spends ~7µs/pair materializing the
-    * joined row (two 64-float arrays) before the dot product even runs
-    * (measured 15.6s for 2M pairs at sf0.1). This is the one place the
-    * mapPartitions tier is warranted: the corpus (id, vector, norm) is
-    * broadcast as primitive arrays, each partition loops `id_b > id_a` pairs
-    * in tight double arithmetic, and only pairs over the threshold ever
-    * become rows.
-    *
-    * Bit-parity contract: dot and norm accumulate sequentially in double
-    * (same bits as [[VectorFns.dotN]] and the DuckDB list_sum oracle);
-    * rounding is `BigDecimal.valueOf(x).setScale(4, HALF_UP)` — exactly
-    * Spark's `round(double, 4)`.
-    *
-    * Scale note: broadcasting the corpus bounds this at a few million
-    * vectors — it is the small-corpus fast path. The gated/production path is
-    * [[embeddingCosinePairsBlocked]] (value-identical, bounded task memory);
-    * or go through [[Similarity.lshTopK]]-style bucketing to escape O(N²).
+  /** All pairs id_a < id_b whose character-3-gram Jaccard, rounded to 4
+    * decimals, is ≥ threshold: exact, and row-identical to
+    * [[ngramJaccardPairs]] and the DuckDB oracle. It runs on [[AllPairs]]
+    * over sorted hashed-shingle sets. The corpus is broadcast while its
+    * shingles are estimated at ≤ [[AllPairs.MaxBroadcastBytes]] (8 bytes
+    * per text char, from one chars probe that reads `n_chars` when
+    * present); above that the pairs run blocked, with a block count bounded
+    * by task memory.
     */
-  def embeddingCosinePairs(e: DataFrame, threshold: Double, dim: Int): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val par = graft.Tuning.fanout(spark)
-    val data = e.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    def norm(v: Array[Float]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < dim) { val x = v(i).toDouble; acc += x * x; i += 1 }
-      math.sqrt(acc)
-    }
-    val corpus = data.collect().sortBy(_._1)
-    val norms = corpus.map(c => norm(c._2))
-    val bc = spark.sparkContext.broadcast((corpus, norms))
-    data.repartition(par).mapPartitions { it =>
-      val (cor, nrm) = bc.value
-      it.flatMap { case (ida, va) =>
-        val na = norm(va)
-        // corpus is sorted by id — start past ida via binary search
-        var lo = 0; var hi = cor.length
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (cor(mid)._1 <= ida) lo = mid + 1 else hi = mid
-        }
-        (lo until cor.length).iterator.flatMap { bi =>
-          val vb = cor(bi)._2
-          var dot = 0.0; var i = 0
-          while (i < dim) { dot += va(i).toDouble * vb(i).toDouble; i += 1 }
-          val cos = dot / (na * nrm(bi))
-          val r = java.math.BigDecimal.valueOf(cos)
-            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-          if (r >= threshold) Iterator.single((ida, cor(bi)._1, r)) else Iterator.empty
-        }
-      }
-    }.toDF("id_a", "id_b", "cos")
-  }
+  def jaccardPairs(d: DataFrame, threshold: Double): DataFrame =
+    AllPairs.selfPairs(shingleSets(d), AllPairs.Jaccard, threshold,
+      AllPairs.modeFor(d.sparkSession, 8L * totalChars(d)))
 
-  /** All-pairs n-gram Jaccard ≥ threshold — broadcast kernel twin of
-    * [[embeddingCosinePairs]]: sorted hashed-shingle sets are broadcast once
-    * and each task runs the two-pointer intersect in tight Scala (a pair
-    * join would copy the ~kB shingle arrays into every joined row).
-    * Values identical to [[ngramJaccardPairs]] / the DuckDB oracle.
-    *
-    * The pair loop is driven by index STRIDES over the broadcast corpus, not
-    * by re-scanning the data: slot s owns rows s, s+par, … — one shingle
-    * scan total (driving it from the Dataset would compute the shingles a
-    * second time — measured ~2 s of the 6 s at sf0.1), and interleaving
-    * balances the triangular workload (row i pairs with n−i partners).
+  /** All pairs id_a < id_b of `vec_id`s whose embedding cosine, rounded to
+    * 4 decimals, is ≥ threshold: exact, with the sequential-double dot and
+    * norms of [[VectorFns.dotN]] and the DuckDB oracle. It runs on
+    * [[AllPairs]]: the vectors are broadcast while rows × (4·dim + 32)
+    * bytes is ≤ [[AllPairs.MaxBroadcastBytes]] (`count()` on a parquet
+    * source resolves from footer metadata, not a scan), and the pairs run
+    * blocked above that. It stays O(N²); [[embeddingCosinePairsLsh]] is the
+    * path that escapes it.
     */
-  def ngramJaccardPairsKernel(d: DataFrame, threshold: Double): DataFrame = {
+  def cosinePairs(e: DataFrame, threshold: Double, dim: Int): DataFrame =
+    AllPairs.selfPairs(vectors(e), AllPairs.cosine(dim), threshold,
+      AllPairs.modeFor(e.sparkSession, e.count() * (4L * dim + 32L)))
+
+  /** (doc_id, sorted hashed shingles of `text`): the Jaccard rows of
+    * [[AllPairs]].
+    */
+  private[graft] def shingleSets(d: DataFrame): Dataset[(Long, Array[Long])] = {
     val spark = d.sparkSession
     import spark.implicits._
-    val par = graft.Tuning.fanout(spark)
-    val sh = d.select(col("doc_id").cast("long"), hashedShingles(col("text")))
+    d.select(col("doc_id").cast("long"), hashedShingles(col("text")))
       .as[(Long, Array[Long])]
-    val corpus = sh.collect().sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(corpus)
-    val slots = math.max(1, math.min(par, corpus.length))
-    spark.range(0, slots, 1, slots).as[Long].mapPartitions { seeds =>
-      val cor = bc.value
-      seeds.flatMap { s =>
-        Iterator.range(s.toInt, cor.length, slots).flatMap { ai =>
-          val (ida, ga) = cor(ai)
-          Iterator.range(ai + 1, cor.length).flatMap { bi =>
-            val gb = cor(bi)._2
-            var i = 0; var j = 0; var n = 0
-            while (i < ga.length && j < gb.length) {
-              val x = ga(i); val y = gb(j)
-              if (x == y) { n += 1; i += 1; j += 1 }
-              else if (x < y) i += 1
-              else j += 1
-            }
-            val den = ga.length + gb.length - n
-            // two sub-n-length docs: 0/0 is NULL in the SQL form → excluded
-            if (den == 0) Iterator.empty
-            else {
-              val jac = java.math.BigDecimal.valueOf(n.toDouble / den)
-                .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-              if (jac >= threshold) Iterator.single((ida, cor(bi)._1, jac))
-              else Iterator.empty
-            }
-          }
-        }
-      }
-    }.toDF("id_a", "id_b", "jac")
   }
 
-  // ---- corpus-blocked all-pairs (the scale path for the O(N²) baselines) --
+  /** (vec_id, embedding): the cosine rows of [[AllPairs]]. */
+  private[graft] def vectors(e: DataFrame): Dataset[(Long, Array[Float])] = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    e.select(col("vec_id").cast("long"), col("embedding")).as[(Long, Array[Float])]
+  }
 
-  /** Block count B, the max of two constraints:
+  /** Block count B of the blocked all-pairs mode ([[AllPairs]], and
+    * SemDedup's within-cell stage), the max of two constraints:
     *  - parallelism: B(B+1)/2 block-pair tasks ≈ 2× the core count keeps
     *    every core busy on the triangular workload;
     *  - memory: a task materializes two blocks ≈ 2·corpusBytes/B, so
@@ -846,160 +788,12 @@ object Dedup {
     math.max(4L, math.max(byCores.toLong, byMemory)).min(65535L).toInt
   }
 
-  /** All-pairs scoring with NO driver collect and NO corpus-sized broadcast —
-    * the Afrati–Ullman block-pair scheme. Rows hash into B blocks by id; each
-    * unordered block pair (i ≤ j) is one task that materializes exactly two
-    * blocks. Each row is shuffled to the B tasks that need it (√(2·tasks)
-    * replication — the provable minimum for all-pairs under a per-task memory
-    * cap), so no single node ever holds the corpus: driver memory is O(1),
-    * executor memory is O(2·corpus/B), and B grows with the corpus.
-    *
-    * The group stage is an RDD `groupByKey` with an EXPLICIT partition count:
-    * this stage is compute-bound (O(N²) scores), not byte-bound, and AQE —
-    * which only sees shuffle bytes — would coalesce a small shuffle onto one
-    * core and serialize the whole pair loop.
-    *
-    * `prep` runs once per materialized row per task (e.g. norm precompute);
-    * `score` is the symmetric pair kernel. Output keeps the oracle contract:
-    * `round(score, 4) >= threshold`, id_a < id_b, HALF_UP — bit-identical to
-    * the broadcast kernels and the DuckDB oracle.
-    */
-  /** Oracle-contract rounding for the RDD pair kernels: HALF_UP to 4
-    * decimals, with NaN (e.g. Jaccard 0/0 on two empty shingle sets) mapped
-    * below any threshold — NULL in the SQL form never passes the filter.
-    */
-  private def round4(x: Double): Double =
-    if (x.isNaN) Double.NegativeInfinity
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  private def blockedPairs[P, Q](data: Dataset[(Long, P)], b: Int,
-                                 prep: P => Q, score: (Q, Q) => Double,
-                                 threshold: Double)(
-      implicit outEnc: Encoder[(Long, Long, Double)]): Dataset[(Long, Long, Double)] = {
-
-    val spark = data.sparkSession
-    val numTasks = b * (b + 1) / 2
-
-    val grouped = data.rdd.flatMap { case (id, p) =>
-      val blk = math.floorMod(id, b).toInt
-      (0 until b).map(o => ((math.min(blk, o), math.max(blk, o)), (id, p)))
-    }.groupByKey(numTasks)
-
-    val pairs = grouped.flatMap { case ((bx, by), group) =>
-      val rows = group.toArray
-      if (bx == by) {
-        val items = rows.map { case (id, p) => (id, prep(p)) }.sortBy(_._1)
-        for {
-          i <- items.indices.iterator
-          j <- (i + 1 until items.length).iterator
-          r = round4(score(items(i)._2, items(j)._2))
-          if r >= threshold
-        } yield (items(i)._1, items(j)._1, r)
-      } else {
-        val (xr, yr) = rows.partition { case (id, _) => math.floorMod(id, b).toInt == bx }
-        val xs = xr.map { case (id, p) => (id, prep(p)) }
-        val ys = yr.map { case (id, p) => (id, prep(p)) }
-        for {
-          x <- xs.iterator
-          y <- ys.iterator
-          r = round4(score(x._2, y._2))
-          if r >= threshold
-        } yield (math.min(x._1, y._1), math.max(x._1, y._1), r)
-      }
-    }
-    spark.createDataset(pairs)
-  }
-
-  /** [[embeddingCosinePairs]] without the collect: corpus-blocked all-pairs
-    * cosine — same values (sequential-double dot/norm, HALF_UP round), scale-
-    * safe shape. This is the gated path; the broadcast kernel remains as the
-    * small-corpus fast path.
-    */
-  def embeddingCosinePairsBlocked(e: DataFrame, threshold: Double, dim: Int,
-                                  blocks: Int = 0): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    // corpus estimate: rows × (vector payload + tuple overhead). count() on
-    // a parquet source resolves from footer metadata, not a scan.
-    val b = if (blocks > 0) blocks
-            else blockCount(spark, corpusBytes = e.count() * (4L * dim + 32L))
-    val data = e.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    blockedPairs[Array[Float], (Array[Float], Double)](
-      data, b,
-      prep = { v =>
-        var acc = 0.0; var i = 0
-        while (i < dim) { val x = v(i).toDouble; acc += x * x; i += 1 }
-        (v, math.sqrt(acc))
-      },
-      score = { (a, c) =>
-        val (va, na) = a; val (vb, nb) = c
-        var dot = 0.0; var i = 0
-        while (i < dim) { dot += va(i).toDouble * vb(i).toDouble; i += 1 }
-        dot / (na * nb)
-      },
-      threshold).toDF("id_a", "id_b", "cos")
-  }
-
-  /** [[ngramJaccardPairsKernel]] without the collect: corpus-blocked all-pairs
-    * two-pointer Jaccard over sorted hashed shingles. Same values as the
-    * declarative form and the DuckDB oracle.
-    */
-  def ngramJaccardPairsBlocked(d: DataFrame, threshold: Double,
-                               blocks: Int = 0, corpusBytes: Long = 0L): DataFrame = {
-    val spark = d.sparkSession
-    import spark.implicits._
-    val b = if (blocks > 0) blocks else blockCount(spark, corpusBytes)
-    val sh = d.select(col("doc_id").cast("long"), hashedShingles(col("text")))
-      .as[(Long, Array[Long])]
-    blockedPairs[Array[Long], Array[Long]](
-      sh, b,
-      prep = identity,
-      score = { (ga, gb) =>
-        var i = 0; var j = 0; var n = 0
-        while (i < ga.length && j < gb.length) {
-          val x = ga(i); val y = gb(j)
-          if (x == y) { n += 1; i += 1; j += 1 }
-          else if (x < y) i += 1
-          else j += 1
-        }
-        n.toDouble / (ga.length + gb.length - n)
-      },
-      threshold).toDF("id_a", "id_b", "jac")
-  }
-
-  /** Adaptive kernel choice for the pairwise-Jaccard path — the same move
-    * AQE makes for joins, applied to the pair kernel: under a corpus-size
-    * threshold the broadcast kernel wins (one task ships the corpus, zero
-    * replication); above it the blocked scheme is the only shape that fits
-    * in bounded memory. One cheap aggregate scan decides. Both kernels are
-    * value-identical, so the choice never changes results.
-    */
-  def ngramJaccardPairsAdaptive(d: DataFrame, threshold: Double,
-                                maxBroadcastChars: Long = 8L << 20): DataFrame = {
-    // 8M chars ≈ 64 MB of hashed-shingle long[]s on the driver (8 bytes per
-    // char upper bound, before dedup) — safely inside a default 1g driver,
-    // unlike the previous 32M default (~270 MB plus a sorted copy). The size
-    // probe prefers a precomputed length column (documents.n_chars): column
-    // pruning then reads 8 bytes/row instead of the full text — at 100 TB
-    // the probe must not itself scan the corpus text. Its result also feeds
-    // the blocked path's memory-bounded block count.
-    val sizeCol =
-      if (d.columns.contains("n_chars")) sum(col("n_chars").cast("long"))
-      else sum(length(col("text")).cast("long"))
-    val row = d.agg(sizeCol).head
-    val totalChars = if (row.isNullAt(0)) 0L else row.getLong(0)
-    if (totalChars <= maxBroadcastChars) ngramJaccardPairsKernel(d, threshold)
-    else ngramJaccardPairsBlocked(d, threshold, corpusBytes = totalChars * 8L)
-  }
-
   /** Embedding near-dup pairs via random-hyperplane LSH — the production
-    * path that escapes the O(N²) of [[embeddingCosinePairsBlocked]]: each
+    * path that escapes the O(N²) of [[cosinePairs]]: each
     * vector gets `bands` sign-bit bucket keys from ONE codegen'd pass
     * ([[graft.functions.LshBandBuckets]]), candidate pairs collide in ≥ 1
     * band, and only candidates are scored with the exact cosine (same
-    * sequential-double contract as the blocked kernel, so every emitted
+    * sequential-double contract as [[cosinePairs]], so every emitted
     * pair is a TRUE pair — banding only affects recall, never precision).
     *
     * Geometry: per-band collision p = (1 − θ/π)^bits — TUNE (bands, bits)
@@ -1008,7 +802,7 @@ object Dedup {
     * 94% recall, while random pairs (θ ≈ 90°) collide at ~0.4% per band.
     * A LOWER threshold needs fewer bits and more bands (cos 0.4: 16×4 ≈
     * 95% recall, at the cost of admitting ~60% of random pairs as
-    * candidates — the low-threshold regime is where the blocked exact path
+    * candidates — the low-threshold regime is where the exact [[cosinePairs]]
     * wins, because LSH selectivity and recall trade off against each
     * other).
     *
@@ -1062,41 +856,6 @@ object Dedup {
         transform(col("embedding"), (x, i) =>
           x + when(i % 2 === 0, lit(eps)).otherwise(lit(-eps))).as("embedding"))
     base.unionByName(planted)
-  }
-
-  /** Cross-set blocked all-pairs (batch × corpus analog of [[blockedPairs]]):
-    * left rows hash into bL blocks, right rows into bR; each (bl, br) pair
-    * is one task holding exactly one block of each side — no broadcast, no
-    * driver collect, per-task memory O(left/bL + right/bR). Output keeps
-    * the oracle contract: round4 HALF_UP, NaN (0/0) skipped.
-    */
-  private def blockedCrossPairs[P, Q](
-      left: Dataset[(Long, P)], right: Dataset[(Long, P)],
-      bLeft: Int, bRight: Int,
-      prep: P => Q, score: (Q, Q) => Double, threshold: Double)(
-      implicit outEnc: Encoder[(Long, Long, Double)]): Dataset[(Long, Long, Double)] = {
-    val spark = left.sparkSession
-    val numTasks = math.min(bLeft.toLong * bRight, Int.MaxValue.toLong).toInt
-    val l = left.rdd.flatMap { case (id, p) =>
-      val bl = math.floorMod(id, bLeft).toInt
-      (0 until bRight).map(br => ((bl, br), (true, id, p)))
-    }
-    val r = right.rdd.flatMap { case (id, p) =>
-      val br = math.floorMod(id, bRight).toInt
-      (0 until bLeft).map(bl => ((bl, br), (false, id, p)))
-    }
-    val pairs = (l union r).groupByKey(numTasks).flatMap { case (_, group) =>
-      val (ls, rs) = group.partition(_._1)
-      val lp = ls.map { case (_, id, p) => (id, prep(p)) }.toArray
-      val rp = rs.map { case (_, id, p) => (id, prep(p)) }.toArray
-      for {
-        x <- lp.iterator
-        y <- rp.iterator
-        s = round4(score(x._2, y._2))
-        if s >= threshold
-      } yield (x._1, y._1, s)
-    }
-    spark.createDataset(pairs)
   }
 
   /** Tier 1 of the incremental-dedup tiers: drop batch rows whose normalized
@@ -1200,13 +959,13 @@ object Dedup {
     * Tiers:
     *  1. exact — anti-join on the normalized-content fingerprint: shuffles
     *     only 128-bit hashes, never text;
-    *  2. near-dup — exact Jaccard of every (batch, corpus) pair: under
-    *     `maxBroadcastChars` of batch text the batch shingle sets broadcast
-    *     and the corpus streams once through the codegen'd
-    *     [[graft.functions.SortedIntersectSize]] merge; above it the
-    *     blocked cross-set kernel runs instead (no broadcast, bounded task
-    *     memory) — both value-identical. Batch docs with any corpus pair
-    *     ≥ threshold are rejected.
+    *  2. near-dup — exact Jaccard of every (batch, corpus) pair, as the
+    *     cross pairs of [[AllPairs]]: while the surviving batch's shingles
+    *     are estimated at ≤ [[AllPairs.MaxBroadcastBytes]] (8 bytes per
+    *     char) the batch is broadcast and the corpus streams past it once;
+    *     above that the pairs run in batch × corpus blocks (no broadcast,
+    *     bounded task memory), with the same rows. Batch docs with any
+    *     corpus pair ≥ threshold are rejected.
     *  2b. banded — past `maxExactCorpusChars` of corpus text, exhaustive
     *     scoring (even memory-bounded) is the wrong asymptotic shape: the
     *     near-dup stage switches to [[bandedNearDupIds]] (MinHash banding
@@ -1229,61 +988,21 @@ object Dedup {
     * both `knownCorpusChars` and its maintained filter.
     */
   def incrementalDedup(corpus: DataFrame, batch: DataFrame, threshold: Double,
-                       maxBroadcastChars: Long = 8L << 20,
                        maxExactCorpusChars: Long = 1L << 30,
                        numHashes: Int = 32, bands: Int = 4,
                        knownCorpusChars: Option[Long] = None,
                        corpusBloom: Option[Array[Byte]] = None,
                        maxBroadcastFps: Long = 4L << 20): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val par = graft.Tuning.fanout(spark)
     val b1 = exactSurvivors(corpus, batch, corpusBloom, maxBroadcastFps)
     val corpusChars = knownCorpusChars.getOrElse(totalChars(corpus))
-    if (corpusChars > maxExactCorpusChars) {
-      val nearDup = bandedNearDupIds(b1, corpus, threshold, numHashes, bands,
-        corpusBytes = corpusChars * 8L)
-      return b1.join(nearDup, b1("doc_id") === nearDup("b_id"), "left_anti")
-        .select(col("doc_id"))
-    }
-    val batchChars = totalChars(b1)
-    val nearDup: DataFrame =
-      if (batchChars <= maxBroadcastChars) {
-        val shB = b1.select(col("doc_id").as("b_id"), hashedShingles(col("text")).as("gb"))
-          .withColumn("szb", size(col("gb")))
-        val shC = corpus.select(hashedShingles(col("text")).as("gc"))
-          .withColumn("szc", size(col("gc"))).repartition(par)
-        shC.join(broadcast(shB), lit(true))
-          .select(col("b_id"),
-            graft.functions.SortedIntersectSize(col("gb"), col("gc")).as("i"),
-            (col("szb") + col("szc")).as("ab"))
-          .select(col("b_id"),
-            round(col("i").cast("double") / (col("ab") - col("i")), 4).as("jac"))
-          .filter(col("jac") >= threshold)
-          .select(col("b_id")).distinct()
-      } else {
-        val shB = b1.select(col("doc_id").cast("long"), hashedShingles(col("text")))
-          .as[(Long, Array[Long])]
-        val shC = corpus.select(col("doc_id").cast("long"), hashedShingles(col("text")))
-          .as[(Long, Array[Long])]
-        val bL = blockCount(spark, batchChars * 8L)
-        val bR = blockCount(spark)
-        blockedCrossPairs[Array[Long], Array[Long]](shB, shC, bL, bR,
-          prep = identity,
-          score = { (ga, gb) =>
-            var i = 0; var j = 0; var n = 0
-            while (i < ga.length && j < gb.length) {
-              val x = ga(i); val y = gb(j)
-              if (x == y) { n += 1; i += 1; j += 1 }
-              else if (x < y) i += 1
-              else j += 1
-            }
-            n.toDouble / (ga.length + gb.length - n)
-          },
-          threshold)
-          .toDF("b_id", "c_id", "jac")
-          .select(col("b_id")).distinct()
-      }
+    val nearDup =
+      if (corpusChars > maxExactCorpusChars)
+        bandedNearDupIds(b1, corpus, threshold, numHashes, bands,
+          corpusBytes = corpusChars * 8L)
+      else
+        AllPairs.crossPairs(shingleSets(b1), shingleSets(corpus), AllPairs.Jaccard,
+          threshold, AllPairs.modeFor(corpus.sparkSession, 8L * totalChars(b1)))
+          .select(col("id_a").as("b_id")).distinct()
     b1.join(nearDup, b1("doc_id") === nearDup("b_id"), "left_anti")
       .select(col("doc_id"))
   }
@@ -1656,11 +1375,11 @@ object Dedup {
         .select(col("doc_id"))
     }),
 
-    // brute-force n-gram Jaccard pairs (oracle baseline for the LSH path) —
-    // size-adaptive: broadcast kernel under the threshold, corpus-blocked
-    // (no collect, bounded task memory) above it
+    // brute-force n-gram Jaccard pairs (oracle baseline for the LSH path):
+    // the all-pairs executor, broadcast under its size cap, blocked (no
+    // collect, bounded task memory) above it
     "dedup_ngram_jaccard" -> ((s, dir) =>
-      ngramJaccardPairsAdaptive(docs(s, dir), threshold = 0.8)),
+      jaccardPairs(docs(s, dir), threshold = 0.8)),
 
     // the same Jaccard-pairs contract via PREFIX FILTERING — exact AND
     // subquadratic in the near-dup-sparse regime (vs the brute baseline
@@ -1744,9 +1463,9 @@ object Dedup {
     // counters hash-compared against a DuckDB-derived conservation row
     "dedup_simhash_check" -> ((s, dir) => simhashInvariants(docs(s, dir))),
 
-    // embedding-cosine near-dup pairs via the corpus-blocked numeric kernel.
+    // embedding-cosine near-dup pairs via the all-pairs executor
     "dedup_embedding_cosine" -> ((s, dir) =>
-      embeddingCosinePairsBlocked(emb(s, dir), threshold = 0.4,
+      cosinePairs(emb(s, dir), threshold = 0.4,
         dim = graft.Tables.EmbeddingDim)),
 
     // embedding near-dup via hyperplane-LSH banding, at its DESIGNED
@@ -1757,8 +1476,8 @@ object Dedup {
     // column arithmetic, no driver data) and must emit one verified pair
     // per plant; every emitted row carries its exact cosine ≥ 0.9, and the
     // full-recovery pin lives in OperatorsSpec. The BROAD-similarity regime
-    // (the 0.4-threshold miner) is deliberately served by the blocked exact
-    // kernel above: banding loose enough to recall cos-0.4 pairs admits
+    // (the 0.4-threshold miner) is deliberately served by the exact
+    // all-pairs entry above: banding loose enough to recall cos-0.4 pairs admits
     // ~60% of ALL pairs as candidates and then re-scores them through two
     // vector-fetch joins — measured 10 s vs the exact kernel's 2 s, i.e. an
     // "index" slower than brute force.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Semantic deduplication over an embedding column — SemDeDup (Abbas et al.
@@ -11,26 +11,23 @@ import org.apache.spark.sql.functions._
   * embedding dedup feasible at corpus scale, at the price of missing the
   * (rare) near-dup pair that straddles a cell boundary: candidate recall is
   * a clustering property, while precision stays exact because every emitted
-  * pair carries its true cosine (OperatorsSpec pins both against the
-  * blocked-exact kernel).
+  * pair carries its true cosine (OperatorsSpec pins both against
+  * [[Dedup.cosinePairs]]).
   *
   * Scale shape: training/assignment reuse the IVF machinery
   * ([[Similarity.kMeansCentroids]] — per-round shuffle is cells × dim
   * doubles, row-count-independent; [[Similarity.kMeansAssign]] — one
-  * codegen'd pass). The within-cell stage re-blocks each cell with the same
-  * Afrati–Ullman scheme as [[Dedup]]'s exact kernels, sized by the LARGEST
-  * cell against both a per-task byte budget AND a per-task pair-count
-  * budget, so one skewed cell (the k-means failure mode) can bust neither
-  * task memory nor task compute — it fans out across cross-salt-block
-  * tasks, every within-cell pair still meeting exactly once.
+  * codegen'd pass). The within-cell stage is the blocked mode of the one
+  * all-pairs executor behind [[Dedup]]'s exact pairs ([[AllPairs]]), with
+  * the cell as group key: task (cell, bx, by) holds blocks bx and by of one
+  * cell, and the cosine and rounding are the executor's own. Blocks are
+  * sized by the LARGEST cell against both a per-task byte budget AND a
+  * per-task pair-count budget, so one skewed cell (the k-means failure
+  * mode) can bust neither task memory nor task compute — it fans out
+  * across cross-salt-block tasks, every within-cell pair still meeting
+  * exactly once.
   */
 object SemDedup {
-
-  /** Oracle-contract rounding (same rule as the [[Dedup]] kernels). */
-  private def round4(x: Double): Double =
-    if (x.isNaN) Double.NegativeInfinity
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Afrati–Ullman block count for the within-cell stage, derived from the
     * LARGEST cell against BOTH task budgets:
@@ -82,48 +79,7 @@ object SemDedup {
         .agg(max(col("count"))).head().getLong(0)
       deriveBlocks(spark, maxCell, dim, maxPairsPerTask)
     }
-    val numTasks = cells * (b * (b + 1) / 2)
-
-    val grouped = assigned.rdd.flatMap { case (cell, id, v) =>
-      val blk = math.floorMod(id, b).toInt
-      (0 until b).map(o => ((cell, math.min(blk, o), math.max(blk, o)), (id, v)))
-    }.groupByKey(numTasks)
-
-    def prep(v: Array[Float]): (Array[Float], Double) = {
-      var acc = 0.0; var i = 0
-      while (i < dim) { val x = v(i).toDouble; acc += x * x; i += 1 }
-      (v, math.sqrt(acc))
-    }
-    def cos(a: (Array[Float], Double), c: (Array[Float], Double)): Double = {
-      val (va, na) = a; val (vb, nb) = c
-      var dot = 0.0; var i = 0
-      while (i < dim) { dot += va(i).toDouble * vb(i).toDouble; i += 1 }
-      dot / (na * nb)
-    }
-
-    val pairs = grouped.flatMap { case ((_, bx, by), group) =>
-      val rows = group.toArray
-      if (bx == by) {
-        val items = rows.map { case (id, v) => (id, prep(v)) }.sortBy(_._1)
-        for {
-          i <- items.indices.iterator
-          j <- (i + 1 until items.length).iterator
-          r = round4(cos(items(i)._2, items(j)._2))
-          if r >= tau
-        } yield (items(i)._1, items(j)._1, r)
-      } else {
-        val (xr, yr) = rows.partition { case (id, _) => math.floorMod(id, b).toInt == bx }
-        val xs = xr.map { case (id, v) => (id, prep(v)) }
-        val ys = yr.map { case (id, v) => (id, prep(v)) }
-        for {
-          x <- xs.iterator
-          y <- ys.iterator
-          r = round4(cos(x._2, y._2))
-          if r >= tau
-        } yield (math.min(x._1, y._1), math.max(x._1, y._1), r)
-      }
-    }
-    spark.createDataset(pairs).toDF("id_a", "id_b", "cos")
+    AllPairs.groupedPairs(assigned, cells, b, AllPairs.cosine(dim), tau)
   }
 
   /** Survivors under the min-id rule: a vector drops iff some smaller-id
@@ -179,7 +135,7 @@ object SemDedup {
   def queries: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame] = Map(
     // rows-only: the k-means partition isn't SQL-expressible; the semantic
     // gate lives in OperatorsSpec (dropped ⊆ exact-dropped, recall pinned
-    // vs the blocked-exact kernel at two scales). Planted near-dups (same
+    // vs Dedup.cosinePairs at two scales). Planted near-dups (same
     // frame as dedup_embedding_lsh) so the entry demonstrably drops rows.
     "semdedup_survivors" -> ((s, dir) =>
       semDedupSurvivors(

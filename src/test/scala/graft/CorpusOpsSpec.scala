@@ -254,11 +254,11 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   // ---------------------------------------------------------------- semdedup
 
-  /** Ground truth for the SemDeDup pins: the exact blocked kernel's dropped
+  /** Ground truth for the SemDeDup pins: the exact all-pairs dropped
     * set (ids with a smaller-id neighbor at cos ≥ τ) on the planted corpus.
     */
   private def exactDropped(dir: String, tau: Double): Set[Long] =
-    Dedup.embeddingCosinePairsBlocked(
+    Dedup.cosinePairs(
         Dedup.plantEmbeddingNearDups(Tables(spark, dir, "embeddings"))
           .localCheckpoint(),
         threshold = tau, dim = Tables.EmbeddingDim)

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFns
-import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.operators.{AllPairs, Dedup, Similarity, TextAnalysis}
 
 /** Unit specs for the LLM-pipeline operators over small in-memory data with
   * hand-computable expectations.
@@ -73,15 +72,24 @@ class OperatorsSpec extends AnyFunSuite {
   test("Dedup: broadcast jaccard kernel equals the declarative pair join") {
     def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("jac"))).toSet
-    val declarative = norm(Dedup.ngramJaccardPairs(docs, threshold = 0.3))
-    val kernel = norm(Dedup.ngramJaccardPairsKernel(docs, threshold = 0.3))
-    assert(declarative === kernel)
-    assert(kernel.nonEmpty)
-    // the corpus-blocked scale path (no collect, no corpus broadcast) is
-    // value-identical too — including with a block count that forces both
-    // same-block and cross-block pair tasks
-    val blocked = norm(Dedup.ngramJaccardPairsBlocked(docs, threshold = 0.3, blocks = 3))
-    assert(blocked === kernel)
+    // "ab" and "" have no 3-gram, so their pair is 0/0 (NULL in the SQL
+    // form) and must never pass, at any threshold; the two "xyz" docs share
+    // their one shingle (Jaccard 1)
+    val withShort = docs.unionByName(
+      Seq((5L, "ab"), (6L, ""), (7L, "xyz"), (8L, "xyz")).toDF("doc_id", "text"))
+    val declarative = norm(Dedup.ngramJaccardPairs(withShort, threshold = 0.3))
+    assert(declarative.contains((7L, 8L, 1.0)))
+    // both modes of the one executor: broadcast, and blocked with a block
+    // count that forces both same-block and cross-block pair tasks
+    for (mode <- Seq(AllPairs.Broadcast, AllPairs.Blocked(3))) {
+      def kernel(t: Double) = norm(AllPairs.selfPairs(
+        Dedup.shingleSets(withShort), AllPairs.Jaccard, t, mode))
+      assert(kernel(0.3) === declarative, s"$mode")
+      val all = kernel(0.0)
+      assert(all.contains((5L, 7L, 0.0)), s"$mode")
+      assert(!all.exists(p => p._1 == 5L && p._2 == 6L), s"$mode: a 0/0 pair passed")
+    }
+    assert(norm(Dedup.jaccardPairs(withShort, threshold = 0.3)) === declarative)
   }
 
   test("Dedup: prefix-filtered join equals brute force at several thresholds") {
@@ -265,10 +273,13 @@ class OperatorsSpec extends AnyFunSuite {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("cos"))).toSet
-    val broadcastKernel = norm(Dedup.embeddingCosinePairs(e, 0.4, Tables.EmbeddingDim))
-    val blocked = norm(Dedup.embeddingCosinePairsBlocked(e, 0.4, Tables.EmbeddingDim, blocks = 5))
+    def kernel(mode: AllPairs.Mode) = norm(AllPairs.selfPairs(Dedup.vectors(e),
+      AllPairs.cosine(Tables.EmbeddingDim), 0.4, mode))
+    val broadcastKernel = kernel(AllPairs.Broadcast)
+    val blocked = kernel(AllPairs.Blocked(5))
     assert(blocked === broadcastKernel)
     assert(blocked.nonEmpty)
+    assert(norm(Dedup.cosinePairs(e, 0.4, Tables.EmbeddingDim)) === broadcastKernel)
   }
 
   test("Similarity: LSH and IVF ANN recall@10 vs brute force (real corpus)") {
@@ -700,7 +711,7 @@ class OperatorsSpec extends AnyFunSuite {
     val docs01 = graft.Tables(spark, "/root/testdata/sf0.01", "documents")
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val exact = pairs(Dedup.ngramJaccardPairsAdaptive(docs01, 0.8))
+    val exact = pairs(Dedup.jaccardPairs(docs01, 0.8))
     val mh = pairs(Dedup.minhashLshPairs(docs01, 0.8))
     // every banded pair is true-jaccard-verified → precision 1.0
     assert(mh.subsetOf(exact), s"false positives: ${mh.diff(exact)}")
@@ -743,7 +754,7 @@ class OperatorsSpec extends AnyFunSuite {
     val e = (base ++ dups).toDF("vec_id", "embedding")
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val exact = pairSet(Dedup.embeddingCosinePairsBlocked(e, 0.9, dim))
+    val exact = pairSet(Dedup.cosinePairs(e, 0.9, dim))
     val lsh = pairSet(Dedup.embeddingCosinePairsLsh(e, 0.9, dim))
     assert(exact.size >= 10, s"fixture should plant ≥10 near-dup pairs, got ${exact.size}")
     // every LSH pair is exact-verified → precision 1.0 by construction
@@ -756,7 +767,7 @@ class OperatorsSpec extends AnyFunSuite {
     // both the exact kernel and the LSH path must agree on EMPTY — a
     // false positive here would be an LSH precision bug
     val e01 = graft.Tables(spark, "/root/testdata/sf0.01", "embeddings")
-    assert(pairSet(Dedup.embeddingCosinePairsBlocked(e01, 0.9, 64)).isEmpty)
+    assert(pairSet(Dedup.cosinePairs(e01, 0.9, 64)).isEmpty)
     assert(pairSet(Dedup.embeddingCosinePairsLsh(e01, 0.9, 64)).isEmpty)
     // the battery entry's plant (dedup_embedding_lsh): every planted copy
     // must come back as exactly its (original, original+offset) pair — at

@@ -10,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SynthScaleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  import spark.implicits._
 
   private val src = "/root/testdata/sf0.001"
   private lazy val out = {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Clustering, Dedup, Sampling, Temporal}
+import graft.operators.{AllPairs, Clustering, Dedup, Sampling, Temporal}
 
 /** Specs for the round-3 "beyond" operators: as-of join, bucketed range
   * join, deterministic hash split, and connected-components dedup
@@ -253,13 +253,19 @@ class TemporalSpec extends AnyFunSuite {
       (12L, "the quick brown fox jumps over the lazy cat"),
       (13L, "entirely novel text that matches nothing else here")
     ).toDF("doc_id", "text")
-    val broadcastPath = graft.operators.Dedup
-      .incrementalDedup(corpus, batch, 0.8).as[Long].collect().toSet
-    val blockedPath = graft.operators.Dedup
-      .incrementalDedup(corpus, batch, 0.8, maxBroadcastChars = 0L)
-      .as[Long].collect().toSet
-    assert(broadcastPath === Set(13L))
+    // the near-dup tier's cross pairs (batch × corpus), in both modes of
+    // the one executor: broadcast batch, and 3 batch blocks × the corpus
+    def cross(mode: AllPairs.Mode) = AllPairs.crossPairs(Dedup.shingleSets(batch),
+        Dedup.shingleSets(corpus), AllPairs.Jaccard, 0.8, mode)
+      .as[(Long, Long, Double)].collect().toSet
+    val broadcastPath = cross(AllPairs.Broadcast)
+    val blockedPath = cross(AllPairs.Blocked(3))
+    assert(broadcastPath.map(p => (p._1, p._2)) === Set((10L, 0L), (12L, 0L)))
     assert(blockedPath === broadcastPath)
+    // the public result: the batch minus every doc with a near-dup pair
+    val admitted = Dedup.incrementalDedup(corpus, batch, 0.8).as[Long].collect().toSet
+    assert(admitted === Set(13L))
+    assert(admitted === Set(10L, 12L, 13L) -- broadcastPath.map(_._1))
   }
 
   test("rangeJoinBucketed: (start, end] boundaries across bucket edges") {
@@ -646,7 +652,7 @@ class TemporalSpec extends AnyFunSuite {
     // minhashLshPairs bounds how much splitting is possible.
     val docs01 = graft.Tables(spark, "/root/testdata/sf0.01", "documents")
     val exactCc = Clustering.connectedComponents(
-      Dedup.ngramJaccardPairsAdaptive(docs01, 0.8).select(col("id_a"), col("id_b")))
+      Dedup.jaccardPairs(docs01, 0.8).select(col("id_a"), col("id_b")))
       .as[(Long, Long)].collect().toMap
     val lshCc = Clustering.connectedComponents(
       Dedup.minhashLshPairs(docs01, 0.8).select(col("id_a"), col("id_b")))
