@@ -243,21 +243,17 @@ object Tuning {
     * the unified pool until the JVM GCs the DataFrame reference AND the
     * async ContextCleaner drains — at sf10 that latency alone starved
     * execution memory mid-round (UNABLE_TO_ACQUIRE_MEMORY in
-    * graph_lpa_converged, 16 GB heap). Resolves the materialized RDD via
-    * the checkpointed plan's LogicalRDD node (reflection: the class is
-    * private[sql]); silently a no-op on any other plan shape, so a caller
-    * cannot free something that was never pinned. NOTE a truncated-lineage
-    * frame is unrecomputable once freed — only call on relations the
-    * operator provably never touches again (the round it superseded).
+    * graph_lpa_converged, 16 GB heap). Unpersists the materialized RDD of
+    * the checkpointed plan's `LogicalRDD` node (a `localCheckpoint` or a
+    * [[pinPartitioned]] result); a no-op on any other plan shape, so a
+    * caller cannot free something that was never pinned. NOTE a
+    * truncated-lineage frame is unrecomputable once freed — only call on
+    * relations the operator provably never touches again (the round it
+    * superseded).
     */
   def freeCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
-    try {
-      val plan = df.queryExecution.logical
-      if (plan.getClass.getSimpleName == "LogicalRDD")
-        plan.getClass.getMethods
-          .find(m => m.getName == "rdd" && m.getParameterCount == 0)
-          .map(_.invoke(plan))
-          .collect { case r: org.apache.spark.rdd.RDD[_] => r }
-          .foreach(_.unpersist(blocking = false))
-    } catch { case _: Throwable => () } // best-effort: leak, don't break
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

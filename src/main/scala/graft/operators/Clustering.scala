@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.fn.Ranking
+
 /** Duplicate-cluster resolution: near-dup PAIRS (from any Dedup operator) →
   * connected components → one cluster id (= min member id) per document.
   * This is the step that turns pairwise similarity output into an actionable
@@ -360,10 +362,7 @@ object Clustering {
       .agg(count(lit(1)).as("n"))
     val sym = pairs.select(col("src").as("w"), col("dst").as("p"), col("n"))
       .unionByName(pairs.select(col("dst").as("w"), col("src").as("p"), col("n")))
-    val byStrength = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("w")).orderBy(col("n").desc, col("p"))
-    sym.withColumn("rk", row_number().over(byStrength))
-      .filter(col("rk") <= topK)
+    Ranking.topK(sym, Seq(col("w")), Seq(col("n").desc, col("p")), topK, "rk")
       .select(least(col("w"), col("p")).as("src"),
         greatest(col("w"), col("p")).as("dst"))
       .distinct()
@@ -587,8 +586,6 @@ object Clustering {
     val sym = graft.Tuning.pinPartitioned(symPlan)
     var labels = sym.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint()
-    val byVotes = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("n").desc, col("label"))
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -612,11 +609,10 @@ object Clustering {
       // (src,label) exchange and the window's (src) exchange both
       // disappear — 3 exchanges per round → 1 (guide §2.4, one exchange
       // shared by operations keyed the same way).
-      val next = votes.repartition(symPar, col("src"))
+      val counts = votes.repartition(symPar, col("src"))
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("n"))
-        .withColumn("rk", row_number().over(byVotes))
-        .filter(col("rk") === 1)
+      val next = Ranking.topK(counts, Seq(col("src")), Seq(col("n").desc, col("label")), 1, "rk")
         .select(col("src").as("node"), col("label"))
         .localCheckpoint()
       round += 1

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.fn.Ranking
+
 /** Entity resolution / record linkage — blocked fuzzy matching of entity
   * names. The reference's data model joins purely on exact keys (`adsh`,
   * `tag`/`version` — `models/Facts`); real corpus curation also needs the
@@ -88,11 +90,8 @@ object Linkage {
   def goldenRecords(resolved: DataFrame, attrs: DataFrame,
                     aggs: Seq[Column]): DataFrame = {
     val base = resolved.join(attrs, Seq("entity_key"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("canonical_key"))
-      .orderBy(col("n_rows").desc, col("name"))
-    val best = base.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
+    val best = Ranking.topK(base, Seq(col("canonical_key")),
+        Seq(col("n_rows").desc, col("name")), 1, "rk")
       .select(col("canonical_key"), col("name").as("name_golden"))
     base.groupBy(col("canonical_key"))
       .agg(count(lit(1)).as("n_members"),

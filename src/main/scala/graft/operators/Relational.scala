@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.fn.Keys
+import graft.fn.{Keys, Ranking}
 import graft.operators.Sampling
 import graft.serve.{Eq, Filters, NumBetween}
 
@@ -307,11 +307,8 @@ object Relational {
 
     // W1: ranked top-k per group (row_number over partition).
     "w1_topk_per_group" -> ((s, dir) => {
-      val w = Window.partitionBy(col("c_nationkey"))
-        .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      t(s, dir, "customer")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      Ranking.topK(t(s, dir, "customer"), Seq(col("c_nationkey")),
+          Seq(col("c_acctbal").desc, col("c_custkey")), 3, "rn")
         .select(col("c_nationkey"), col("c_custkey"), col("rn"))
     }),
 
@@ -461,10 +458,7 @@ object Relational {
       val cnt = t(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_quantity"))
         .agg(count(lit(1)).as("n"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("l_returnflag"))
-        .orderBy(col("n").desc, col("l_quantity"))
-      cnt.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+      Ranking.topK(cnt, Seq(col("l_returnflag")), Seq(col("n").desc, col("l_quantity")), 1, "rk")
         .select(col("l_returnflag"), col("l_quantity").as("mode_qty"),
           col("n").as("mode_n"))
     }),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fn.Ranking
 import graft.functions.VectorFns
 
 /** Corpus retrieval — the search half of a training-data/RAG pipeline: sparse
@@ -98,11 +99,8 @@ object Retrieval {
       .join(broadcast(qterms), "term")
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(w), 6).as("score"))
-    val win = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rank", row_number().over(win).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("rank"))
+    Ranking.topK(scored, Seq(col("query_id")), Seq(col("score").desc, col("doc_id")), k)
+      .select(col("query_id"), col("doc_id"), col("rank").cast("long").as("rank"))
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR 2009) of two
@@ -147,10 +145,9 @@ object Retrieval {
           .otherwise(lit(0.0)) +
           when(col("r_l2") <= armK, lit(1.0) / (lit(c.toDouble) + col("r_l2")))
             .otherwise(lit(0.0)))
-    val wF = Window.partitionBy(col("q_id")).orderBy(col("rrf").desc, col("vec_id"))
-    fused.withColumn("fused_rank", row_number().over(wF).cast("long"))
-      .filter(col("fused_rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("fused_rank"))
+    Ranking.topK(fused, Seq(col("q_id")), Seq(col("rrf").desc, col("vec_id")), k, "fused_rank")
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
+        col("fused_rank").cast("long").as("fused_rank"))
   }
 
   /** Hybrid lexical×quality ranking: BM25 relevance fused (RRF) with the
@@ -200,10 +197,9 @@ object Retrieval {
       .withColumn("rrf",
         lit(1.0) / (lit(c.toDouble) + col("r_rel")) +
           lit(1.0) / (lit(c.toDouble) + col("r_q")))
-    val wF = Window.partitionBy(col("query_id")).orderBy(col("rrf").desc, col("doc_id"))
-    fused.withColumn("fused_rank", row_number().over(wF).cast("long"))
-      .filter(col("fused_rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("fused_rank"))
+    Ranking.topK(fused, Seq(col("query_id")), Seq(col("rrf").desc, col("doc_id")), k,
+        "fused_rank")
+      .select(col("query_id"), col("doc_id"), col("fused_rank").cast("long").as("fused_rank"))
   }
 
   /** Exact phrase matching through a POSITIONAL posting list (r13) — the

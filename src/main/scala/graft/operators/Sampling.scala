@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.fn.Ranking
+
 /** Deterministic sampling / split assignment for training-data pipelines.
   *
   * The split a document lands in must be a pure function of a STABLE key —
@@ -111,10 +113,8 @@ object Sampling {
     */
   def reservoirPerStratum(df: DataFrame, key: Column, stratum: Column,
                           k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(stratum).orderBy(md5(key.cast("string")), key)
-    df.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+    Ranking.topK(df, Seq(stratum), Seq(md5(key.cast("string")), key), k, "rk")
+      .withColumn("rk", col("rk").cast("long"))
   }
 
   /** Weighted sampling WITHOUT replacement, exactly `k` per stratum
@@ -142,11 +142,8 @@ object Sampling {
       .cast("long")
     val u = (bucket.cast("double") + 0.5) / 4294967296.0
     val esKey = round(log(u) / weight * 1e12).cast("long")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(stratum).orderBy(esKey.desc, key)
-    df.filter(weight > 0)
-      .withColumn("es_rk", row_number().over(w).cast("long"))
-      .filter(col("es_rk") <= k)
+    Ranking.topK(df.filter(weight > 0), Seq(stratum), Seq(esKey.desc, key), k, "es_rk")
+      .withColumn("es_rk", col("es_rk").cast("long"))
   }
 
   /** Importance (quality-weighted) sampling: each row's keep probability IS

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.fn.Keys
+import graft.fn.{Keys, Ranking}
 
 /** Slowly-changing-dimension history (dbt `snapshot`, `check` strategy) and
   * MERGE upsert (dbt incremental `merge` strategy) — the two dbt
@@ -169,10 +169,8 @@ object Scd {
       .withColumn(opCol, lit("I")).withColumn(versionCol, lit(0L))
       .unionByName(changes.select(
         (dataCols.map(col) :+ col(opCol) :+ col(versionCol).cast("long")): _*))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col(versionCol).desc)
-    all.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col(opCol) =!= "D")
+    Ranking.topK(all, Seq(col(key)), Seq(col(versionCol).desc), 1, "__rn")
+      .filter(col(opCol) =!= "D")
       .select(dataCols.map(col): _*)
   }
 

@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fn.Ranking
 import graft.functions.VectorFns
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -38,69 +38,93 @@ object Similarity {
   private def normC(a: Column, dim: Option[Int]): Column =
     dim.fold(VectorFns.l2norm(a))(d => VectorFns.l2normN(a, d))
 
+  /** The sequential-double cosine `cos` of the query vector `q_emb` (norm
+    * `qnrm`) and the row vector `embedding` (norm `nrm`): the score every
+    * exact tier ranks by and every oracle pins.
+    */
+  private def cosine(dim: Option[Int]): Column =
+    (dotC(col("q_emb"), col("embedding"), dim) / (col("qnrm") * col("nrm"))).as("cos")
+
   /** Queries = every 100th vector — deterministic, scale-independent. */
   private def querySet(e: DataFrame): DataFrame =
     e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
 
-  /** Exact top-k by cosine (excluding self), ranked desc with id tiebreak.
+  /** [[querySet]] with its norm `qnrm`: the query frame of the exact tiers. */
+  private def normedQuerySet(e: DataFrame, dim: Option[Int]): DataFrame =
+    querySet(e).withColumn("qnrm", normC(col("q_emb"), dim))
+
+  /** `d` with the norm `nrm` of its `embedding`. */
+  private def withNorm(d: DataFrame, dim: Option[Int]): DataFrame =
+    d.withColumn("nrm", normC(col("embedding"), dim))
+
+  /** Exact cosine top-k of broadcast queries against a streamed corpus — the
+    * one search behind the exact tiers, the bitext arms and the IVF probes.
     *
-    * Plan shape for scale: the tiny query set is broadcast, the corpus is the
-    * streamed side (repartitioned — a small parquet input would otherwise be
-    * one partition and serialize the whole scan), and L2 norms are computed
-    * once per vector instead of once per (query, vector) pair.
+    *  1. `corpus` (`vec_id`, `embedding`, any `keep` columns) is widened to
+    *     [[graft.Tuning.fanout]] partitions when it arrives with fewer: a
+    *     small parquet input is one partition and would serialize the score
+    *     loop, while a production-scale corpus already arrives wider than
+    *     the cluster and an exchange before a broadcast join is waste.
+    *     Cores, not input bytes, size it: every corpus row is scored against
+    *     every broadcast query it meets, so bytes undercount the work
+    *     |Q|-fold (a bytes target fanned the bitext arms to 3 partitions at
+    *     sf0.1), and the fanout is share-aware, so inside a concurrent gate
+    *     the search sizes to its share of the cores.
+    *  2. The row norm `nrm` is computed once per corpus row, after the
+    *     widening, unless the corpus already carries it (then it was
+    *     computed in the scan stage, and a caller can reuse it).
+    *  3. `q` (`q_id`, `q_emb`, `qnrm` and whatever `on` reads) is broadcast.
+    *  4. The join is on `using` columns (the IVF `cell`) and `on`.
+    *  5. [[cosine]] scores each pair.
+    *  6. [[Ranking.topK]] keeps the `k` best per query, ordered by cosine
+    *     descending with the neighbor id as tiebreak.
+    *
+    * Output: `q_id`, `vec_id` (renamed to `ids`), `keep…`, `cos`, `rankCol`.
     */
-  def bruteForceTopK(e: DataFrame, k: Int, dim: Option[Int] = None): DataFrame = {
-    val par = graft.Tuning.fanout(e.sparkSession)
-    val base = e.select(col("vec_id"), col("embedding"),
-      normC(col("embedding"), dim).as("nrm"))
-    // repartition only when the scan underfills the cores (a small parquet
-    // input is one partition and would serialize the whole score loop); a
-    // production-scale corpus already arrives wider than the cluster and
-    // paying a full exchange before a broadcast join is pure waste.
-    // getNumPartitions plans the RDD without running a job.
-    val corpus = if (base.rdd.getNumPartitions < par) base.repartition(par) else base
-    val q = querySet(e)
-      .withColumn("qnrm", normC(col("q_emb"), dim))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    corpus.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (dotC(col("q_emb"), col("embedding"), dim) /
-          (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"))
+  private def cosineTopK(corpus: DataFrame, q: DataFrame, k: Int,
+                         dim: Option[Int], on: Column = lit(true),
+                         using: Seq[String] = Nil, keep: Seq[String] = Nil,
+                         ids: (String, String) = ("q_id", "vec_id"),
+                         rankCol: String = "rank"): DataFrame = {
+    val par = graft.Tuning.fanout(corpus.sparkSession)
+    // getNumPartitions plans the RDD without running a job
+    val wide = if (corpus.rdd.getNumPartitions < par) corpus.repartition(par) else corpus
+    val normed = if (wide.columns.contains("nrm")) wide else withNorm(wide, dim)
+    val (qId, nId) = ids
+    val scored = normed.join(broadcast(q), using).filter(on)
+      .select(Seq(col("q_id").as(qId), col("vec_id").as(nId)) ++ keep.map(col) :+
+        cosine(dim): _*)
+    Ranking.topK(scored, Seq(col(qId)), Seq(col("cos").desc, col(nId)), k, rankCol)
   }
+
+  /** Exact top-k by cosine (excluding self), ranked desc with id tiebreak:
+    * [[cosineTopK]] over the whole corpus.
+    */
+  def bruteForceTopK(e: DataFrame, k: Int, dim: Option[Int] = None): DataFrame =
+    cosineTopK(withNorm(e.select(col("vec_id"), col("embedding")), dim),
+        normedQuerySet(e, dim), k, dim, col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"))
 
   /** Hard-negative mining — the contrastive-training data builder: for each
     * query, the k nearest vectors by cosine whose `label` DIFFERS from the
     * query's (nearest wrong-class examples are the informative negatives;
     * random negatives are too easy to teach a metric model anything).
     *
-    * Exact form, oracled: same broadcast-query / streamed-corpus plan as
-    * [[bruteForceTopK]] with the label-mismatch predicate folded into the
-    * broadcast join. At production scale the identical label filter drops
-    * into [[ivfQuantizedTopK]]'s candidate stage instead (filter before the
-    * re-rank); the exact tier is the yardstick the approximate one is
-    * measured against, as everywhere in this module.
+    * Exact form, oracled: [[cosineTopK]] with the label-mismatch predicate
+    * folded into the broadcast join. At production scale the identical
+    * label filter drops into [[ivfQuantizedTopK]]'s candidate stage instead
+    * (filter before the re-rank); the exact tier is the yardstick the
+    * approximate one is measured against, as everywhere in this module.
     */
   def hardNegativesTopK(e: DataFrame, k: Int, dim: Option[Int] = None): DataFrame = {
-    val par = graft.Tuning.fanout(e.sparkSession)
-    val base = e.select(col("vec_id"), col("embedding"), col("label"),
-      normC(col("embedding"), dim).as("nrm"))
-    val corpus = if (base.rdd.getNumPartitions < par) base.repartition(par) else base
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("label").as("q_label"))
       .withColumn("qnrm", normC(col("q_emb"), dim))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    corpus.join(broadcast(q),
-        col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
-      .select(col("q_id"), col("vec_id"), col("label"),
-        (dotC(col("q_emb"), col("embedding"), dim) /
-          (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    cosineTopK(withNorm(e.select(col("vec_id"), col("embedding"), col("label")), dim),
+        q, k, dim, col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"),
+        keep = Seq("label"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         col("label").as("neg_label"), col("rank"))
   }
@@ -138,43 +162,22 @@ object Similarity {
   def marginBitextPairs(e: DataFrame, k: Int = 4,
                         dim: Option[Int] = None): DataFrame = {
     require(k >= 1, s"marginBitextPairs needs k >= 1, got $k")
-    // CORES-based widening, deliberately NOT the bytes-based
-    // widenForCompute: these are cartesian scoring arms (every corpus row
-    // is scored against |Q| broadcast queries), so input bytes undercount
-    // the work |Q|-fold — a bytes target fanned the exact arm to 3
-    // partitions at sf0.1 and the entry regressed 2.5× in-suite. The
-    // fanout is share-aware, so inside a concurrent gate the arm sizes to
-    // its share of the cores, not the whole machine.
-    val par = graft.Tuning.fanout(e.sparkSession)
-    def widen(d: DataFrame): DataFrame =
-      if (d.rdd.getNumPartitions < par) d.repartition(par) else d
-    val src = e.filter(col("vec_id") % 2 === 0)
-      .select(col("vec_id"), col("embedding"),
-        normC(col("embedding"), dim).as("nrm"))
-    val tgt = e.filter(col("vec_id") % 2 === 1)
-      .select(col("vec_id"), col("embedding"),
-        normC(col("embedding"), dim).as("nrm"))
+    // both collections carry their norms: the target's are reused as the
+    // backward queries' `qnrm`
+    val src = withNorm(e.filter(col("vec_id") % 2 === 0)
+      .select(col("vec_id"), col("embedding")), dim)
+    val tgt = withNorm(e.filter(col("vec_id") % 2 === 1)
+      .select(col("vec_id"), col("embedding")), dim)
     val q = e.filter(col("vec_id") % 20 === 0) // even ⇒ all in src
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         normC(col("embedding"), dim).as("qnrm"))
-    val wF = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("tgt_id"))
-    val fwd = widen(tgt).join(broadcast(q), lit(true))
-      .select(col("q_id"), col("vec_id").as("tgt_id"),
-        (dotC(col("q_emb"), col("embedding"), dim) /
-          (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rk", row_number().over(wF))
-      .filter(col("rk") <= k)
+    val fwd = cosineTopK(tgt, q, k, dim, ids = ("q_id", "tgt_id"), rankCol = "rk")
       .localCheckpoint() // feeds the sum, the candidate set, and the final join
     val cand = fwd.select(col("tgt_id")).distinct()
       .join(tgt, col("tgt_id") === col("vec_id"))
-      .select(col("tgt_id"), col("embedding").as("c_emb"), col("nrm").as("cnrm"))
-    val wB = Window.partitionBy(col("tgt_id")).orderBy(col("cos").desc, col("src_id"))
-    val bwd = widen(src).join(broadcast(cand), lit(true))
-      .select(col("tgt_id"), col("vec_id").as("src_id"),
-        (dotC(col("c_emb"), col("embedding"), dim) /
-          (col("cnrm") * col("nrm"))).as("cos"))
-      .withColumn("brk", row_number().over(wB))
-      .filter(col("brk") <= k)
+      .select(col("tgt_id").as("q_id"), col("embedding").as("q_emb"),
+        col("nrm").as("qnrm"))
+    val bwd = cosineTopK(src, cand, k, dim, ids = ("tgt_id", "src_id"), rankCol = "brk")
       .localCheckpoint() // feeds the sum and the mutuality probe
     bitextAssemble(fwd, bwd, k)
   }
@@ -192,8 +195,6 @@ object Similarity {
       .agg(sum(cos6(col("cos"))).as("bsum6"))
     val mutual = bwd.filter(col("brk") === 1)
       .select(col("tgt_id"), col("src_id").as("b1_src"))
-    val wM = Window.partitionBy(col("q_id"))
-      .orderBy(col("margin").desc, col("tgt_id"))
     // LEFT joins on the backward-arm frames (advisor r13): in the exact
     // tier every forward candidate has a nonempty backward neighborhood
     // (that arm scans the full source collection), but an IVF candidate
@@ -207,7 +208,7 @@ object Similarity {
     // where Spark's null-on-/0 would silently drop the query — emit a
     // deterministic 0.0 margin instead, mirrored in the oracle SQL.
     val den = col("fsum6") + coalesce(col("bsum6"), lit(0L))
-    fwd.join(fsum, "q_id")
+    val pairs = fwd.join(fsum, "q_id")
       .join(bsum, Seq("tgt_id"), "left")
       .join(mutual, Seq("tgt_id"), "left")
       .select(col("q_id"), col("tgt_id"),
@@ -215,8 +216,7 @@ object Similarity {
           .otherwise(round(cos6(col("cos")) * lit(2.0) * k / den, 6))
           .as("margin"),
         coalesce(col("b1_src") === col("q_id"), lit(false)).as("is_mutual"))
-      .withColumn("mrk", row_number().over(wM))
-      .filter(col("mrk") === 1)
+    Ranking.topK(pairs, Seq(col("q_id")), Seq(col("margin").desc, col("tgt_id")), 1, "mrk")
       .select(col("q_id"), col("tgt_id"), col("margin"), col("is_mutual"))
   }
 
@@ -242,12 +242,6 @@ object Similarity {
       s"need nProbe <= cells (or 0 = auto), got k=$k cells=$cells nProbe=$nProbe")
     val s = e.sparkSession
     val dimO = Some(dim)
-    // cores-based (share-aware) widening — same cartesian-arm rationale as
-    // the exact tier's: scoring work is per (row × probed query), so input
-    // bytes undercount it
-    val par = graft.Tuning.fanout(s)
-    def widen(d: DataFrame): DataFrame =
-      if (d.rdd.getNumPartitions < par) d.repartition(par) else d
     // probed top-k of `queries` against `coll` with PRE-TRAINED centroids:
     // assign, probe, score. Geometry auto-sizes PER COLLECTION (cells = 0
     // default): the source and target collections of a real mining run
@@ -255,19 +249,10 @@ object Similarity {
     // cells^(2/3) probes.
     def probedTopK(queries: DataFrame, coll: DataFrame,
                    cents: Array[Array[Double]], p: Int,
-                   outQ: String, outN: String, outRk: String): DataFrame = {
-      val assigned = kMeansAssign(coll, cents, dim)
-      val probed = probeCellsOf(queries, centroidFrame(s, cents), p, dimO)
-      val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-      widen(assigned).withColumn("nrm", normC(col("embedding"), dimO))
-        .join(broadcast(probed), Seq("cell"))
-        .select(col("q_id"), col("vec_id"),
-          (dotC(col("q_emb"), col("embedding"), dimO) /
-            (col("qnrm") * col("nrm"))).as("cos"))
-        .withColumn(outRk, row_number().over(w))
-        .filter(col(outRk) <= k)
-        .select(col("q_id").as(outQ), col("vec_id").as(outN), col("cos"), col(outRk))
-    }
+                   ids: (String, String), rankCol: String): DataFrame =
+      cosineTopK(kMeansAssign(coll, cents, dim),
+        probeCellsOf(queries, centroidFrame(s, cents), p, dimO), k, dimO,
+        using = Seq("cell"), ids = ids, rankCol = rankCol)
     val src = e.filter(col("vec_id") % 2 === 0)
     val tgt = e.filter(col("vec_id") % 2 === 1)
     val q = e.filter(col("vec_id") % 20 === 0)
@@ -288,13 +273,13 @@ object Similarity {
           val (c, p) = resolveGeometry(src.count(), cells, nProbe, dim)
           (kMeansCentroids(src, c, iters, dim), p)
         }))
-    val fwd = probedTopK(q, tgt, centsT, pT, "q_id", "tgt_id", "rk")
+    val fwd = probedTopK(q, tgt, centsT, pT, ("q_id", "tgt_id"), "rk")
       .localCheckpoint()
     val cand = fwd.select(col("tgt_id")).distinct()
       .join(tgt, col("tgt_id") === col("vec_id"))
       .select(col("tgt_id").as("q_id"), col("embedding").as("q_emb"),
         normC(col("embedding"), dimO).as("qnrm"))
-    val bwd = probedTopK(cand, src, centsS, pS, "tgt_id", "src_id", "brk")
+    val bwd = probedTopK(cand, src, centsS, pS, ("tgt_id", "src_id"), "brk")
       .localCheckpoint()
     bitextAssemble(fwd, bwd, k)
   }
@@ -401,18 +386,14 @@ object Similarity {
     val c = e.select(col("vec_id"), col("embedding")).repartition(par)
       .select(col("vec_id"), col("embedding"), normC(col("embedding"), Some(dim)).as("nrm"),
         posexplode(LshBandBuckets(col("embedding"), bands, bitsPerBand, dim)).as(Seq("bi", "bk")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
     // broadcast the tiny exploded query side: stats after posexplode are
     // unknown, and a sort-merge join here would shuffle+sort the exploded
     // corpus (bands× rows, each carrying the full embedding array)
-    broadcast(q).join(c, Seq("bi", "bk"))
+    val cand = broadcast(q).join(c, Seq("bi", "bk"))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (dotC(col("q_emb"), col("embedding"), Some(dim)) /
-          (col("qnrm") * col("nrm"))).as("cos"))
+      .select(col("q_id"), col("vec_id"), cosine(Some(dim)))
       .dropDuplicates("q_id", "vec_id")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Ranking.topK(cand, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"))
   }
 
@@ -435,8 +416,7 @@ object Similarity {
     */
   private[graft] def probeCells(e: DataFrame, cent: DataFrame, nProbe: Int,
                                 dim: Option[Int]): DataFrame =
-    probeCellsOf(querySet(e).withColumn("qnrm", normC(col("q_emb"), dim)),
-      cent, nProbe, dim)
+    probeCellsOf(normedQuerySet(e, dim), cent, nProbe, dim)
 
   /** [[probeCells]] with an EXPLICIT query frame (`q_id`, `q_emb`, `qnrm`)
     * instead of the battery's `querySet` — the seam that lets other
@@ -446,41 +426,24 @@ object Similarity {
   private[graft] def probeCellsOf(q: DataFrame, cent: DataFrame, nProbe: Int,
                                   dim: Option[Int]): DataFrame = {
     val centN = broadcast(cent.withColumn("cnrm", normC(col("centroid"), dim)))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cdist").desc, col("cell"))
-    q.join(centN)
+    val scored = q.join(centN)
       .select(col("q_id"), col("q_emb"), col("qnrm"), col("cell"),
         dotC(col("q_emb"), col("centroid"), dim)
           .divide(col("qnrm") * col("cnrm")).as("cdist"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nProbe)
+    Ranking.topK(scored, Seq(col("q_id")), Seq(col("cdist").desc, col("cell")), nProbe, "pr")
       .select(col("q_id"), col("q_emb"), col("qnrm"), col("cell"))
   }
 
   /** Search core shared by the `label`-cell and k-means IVF variants:
-    * score only the corpus rows whose `cell` some query probed.
+    * score only the corpus rows whose `cell` some query probed. The tiny
+    * probed set broadcasts ([[cosineTopK]]) — a shuffle join on `cell`
+    * would cap parallelism at the number of cells.
     */
   private def ivfSearch(corpusCells: DataFrame, cent: DataFrame, e: DataFrame,
-                        k: Int, nProbe: Int, dim: Option[Int]): DataFrame = {
-    val probed = probeCells(e, cent, nProbe, dim)
-    val par = graft.Tuning.fanout(e.sparkSession)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    // corpus streams widened to the thread's core share (fanout is
-    // arm-share-aware; bytes-based sizing was rejected here — scoring work
-    // is per (row × probed query), which input bytes undercount), the tiny
-    // probed set broadcasts — a shuffle join on `cell` would cap
-    // parallelism at the number of cells
-    (if (corpusCells.rdd.getNumPartitions < par) corpusCells.repartition(par)
-     else corpusCells)
-      .withColumn("nrm", normC(col("embedding"), dim))
-      .join(broadcast(probed), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (dotC(col("q_emb"), col("embedding"), dim) /
-          (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+                        k: Int, nProbe: Int, dim: Option[Int]): DataFrame =
+    cosineTopK(corpusCells, probeCells(e, cent, nProbe, dim), k, dim,
+        col("vec_id") =!= col("q_id"), using = Seq("cell"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"))
-  }
 
   /** IVF ANN over pre-partitioned cells: any existing cell column (an
     * upstream partitioner, a tenant key) works — centroids are the per-cell
@@ -749,12 +712,11 @@ object Similarity {
       querySet(e).withColumnRenamed("q_emb", "qe"), "qe", dim,
       qCol = "qqv", qnCol = "qqn")
       .select(col("q_id"), col("qqv"), col("qqn"))
-    val wQ = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("vec_id"))
-    val cand = corpus.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    val scored = corpus.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         (qdotN(col("qqv"), col("qv"), dim) / (col("qqn") * col("qn"))).as("qcos"))
-      .withColumn("qrank", row_number().over(wQ))
-      .filter(col("qrank") <= k * rerankFactor)
+    val cand = Ranking.topK(scored, Seq(col("q_id")),
+        Seq(col("qcos").desc, col("vec_id")), k * rerankFactor, "qrank")
       .select(col("q_id"), col("vec_id"))
     exactRerank(e, cand, k, dim)
   }
@@ -770,15 +732,10 @@ object Similarity {
     */
   private def exactRerank(e: DataFrame, cand: DataFrame, k: Int, dim: Int): DataFrame = {
     val floats = e.select(col("vec_id"), col("embedding"))
-    val qFloats = querySet(e).withColumn("qnrm", normC(col("q_emb"), Some(dim)))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    broadcast(cand).join(floats, Seq("vec_id"))
-      .join(broadcast(qFloats), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (dotC(col("q_emb"), col("embedding"), Some(dim)) /
-          (col("qnrm") * normC(col("embedding"), Some(dim)))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val scored = withNorm(broadcast(cand).join(floats, Seq("vec_id"))
+        .join(broadcast(normedQuerySet(e, Some(dim))), Seq("q_id")), Some(dim))
+      .select(col("q_id"), col("vec_id"), cosine(Some(dim)))
+    Ranking.topK(scored, Seq(col("q_id")), Seq(col("cos").desc, col("vec_id")), k)
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"))
   }
 
@@ -927,8 +884,8 @@ object Similarity {
     // brute scan per query — with the caller's rerankFactor·k as the
     // small-corpus floor. (IVF-PQ does not need this: probing √N cells
     // already bounds its candidate pool sub-linearly.)
-    val rerankN = math.max(k.toLong * rerankFactor,
-      math.ceil(e.count() / 100.0).toLong)
+    val rerankN = math.min(Int.MaxValue.toLong, math.max(k.toLong * rerankFactor,
+      math.ceil(e.count() / 100.0).toLong)).toInt
     val cb = pqTrainCodebooks(e, m, ks, iters, dim)
     // the stored index, materialized as its own stage for the same two
     // reasons as [[ivfInMemory]]'s: it IS the persistent artifact, and a
@@ -941,16 +898,14 @@ object Similarity {
     // limit (measured — "Code grows beyond 64 KB" + interpreted fallback);
     // the loop stays codegen'd at any ks. See [[graft.functions.PqAdcTable]].
     val dlut = graft.functions.PqAdcTable(col("q_emb"), cb, m, subDim, ks)
-    val q = querySet(e)
-      .withColumn("qnrm", normC(col("q_emb"), Some(dim)))
+    val q = normedQuerySet(e, Some(dim))
       .withColumn("dlut", dlut)
       .select(col("q_id"), col("qnrm"), col("dlut"))
-    val wQ = Window.partitionBy(col("q_id")).orderBy(col("acos").desc, col("vec_id"))
-    val cand = corpus.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    val scored = corpus.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         (adcSum(m, ks) / (col("qnrm") * col("pqn"))).as("acos"))
-      .withColumn("arank", row_number().over(wQ))
-      .filter(col("arank") <= rerankN)
+    val cand = Ranking.topK(scored, Seq(col("q_id")),
+        Seq(col("acos").desc, col("vec_id")), rerankN, "arank")
       .select(col("q_id"), col("vec_id"))
     exactRerank(e, cand, k, dim)
   }
@@ -1117,10 +1072,8 @@ object Similarity {
     val probed = probeCells(full, centroidFrame(full.sparkSession, cents),
       nProbe, Some(dim))
     val rf = if (rerankFactor > 0) rerankFactor else code.rerankFactor
-    val w = Window.partitionBy(col("q_id")).orderBy(col("acos").desc, col("vec_id"))
-    val cand = code.score(full, corpus, probed, cents, dim)
-      .withColumn("arank", row_number().over(w))
-      .filter(col("arank") <= k * rf)
+    val cand = Ranking.topK(code.score(full, corpus, probed, cents, dim),
+        Seq(col("q_id")), Seq(col("acos").desc, col("vec_id")), k * rf, "arank")
       .select(col("q_id"), col("vec_id"))
     exactRerank(full, cand, k, dim)
   }
@@ -1539,23 +1492,13 @@ object Similarity {
   }
 
   /** Top-k candidates per query with their vectors and norms carried —
-    * the input frame MMR re-ranks. Same plan shape as [[bruteForceTopK]]
-    * (broadcast query set, streamed corpus, norms computed once).
+    * the input frame MMR re-ranks: [[bruteForceTopK]]'s search, keeping
+    * `embedding` and `nrm`.
     */
-  def mmrCandidates(e: DataFrame, k: Int, dim: Option[Int]): DataFrame = {
-    val par = graft.Tuning.fanout(e.sparkSession)
-    val base = e.select(col("vec_id"), col("embedding"),
-      normC(col("embedding"), dim).as("nrm"))
-    val corpus = if (base.rdd.getNumPartitions < par) base.repartition(par) else base
-    val q = querySet(e).withColumn("qnrm", normC(col("q_emb"), dim))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    corpus.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), col("embedding"), col("nrm"),
-        (dotC(col("q_emb"), col("embedding"), dim) /
-          (col("qnrm") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+  def mmrCandidates(e: DataFrame, k: Int, dim: Option[Int]): DataFrame =
+    cosineTopK(withNorm(e.select(col("vec_id"), col("embedding")), dim),
+      normedQuerySet(e, dim), k, dim, col("vec_id") =!= col("q_id"),
+      keep = Seq("embedding", "nrm"))
 
   /** MMR diversified re-rank (Maximal Marginal Relevance, Carbonell &
     * Goldstein SIGIR'98): from each query's top-`k` cosine candidates,

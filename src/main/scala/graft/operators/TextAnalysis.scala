@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.fn.Ranking
+
 /** Text-analysis operators for a large-scale training-data pipeline:
   * token counting, quality scoring, language identification (stopword-profile
   * heuristic), and document fingerprinting. All are codegen'd column
@@ -102,13 +104,10 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf"))
     val df = toks.groupBy(col("term"))
       .agg(countDistinct(col("doc_id")).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("score").desc, col("term"))
-    tf.join(df, Seq("term"))
+    val scored = tf.join(df, Seq("term"))
       .select(col("doc_id"), col("term"), col("tf"),
         ((col("tf") * (n + 1)).cast("double") / (col("df") + 1)).as("score"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    Ranking.topK(scored, Seq(col("doc_id")), Seq(col("score").desc, col("term")), k, "rnk")
       .select(col("doc_id"), col("term"), col("tf"),
         round(col("score"), 4).as("score"), col("rnk"))
   }

@@ -826,6 +826,20 @@ class OperatorsSpec extends AnyFunSuite {
       corpusBloom = Some(bloomBytes)).as[Long].collect().toSet === Set(13L))
   }
 
+  test("Dedup: shingle-less docs emit no band keys, so the LSH tiers neither pair nor throw") {
+    // "" and "ab" have no character 3-gram: MinHashBandKeys returns NULL
+    // for an empty shingle set, so such a doc is never a band candidate and
+    // the Jaccard verify never sees 0/0 (which throws under ANSI)
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    val docs = Seq((1L, ""), (2L, "ab"), (3L, ""), (4L, "ab"),
+      (5L, "the quick brown fox")).toDF("doc_id", "text")
+    assert(Dedup.minhashLshPairs(docs, threshold = 0.8).count() === 0L)
+    val corpus = Seq((1L, ""), (2L, "ab")).toDF("doc_id", "text")
+    val batch = Seq((10L, "cd"), (11L, "e"), (12L, "the quick brown fox")).toDF("doc_id", "text")
+    assert(Dedup.incrementalDedupBanded(corpus, batch, threshold = 0.8)
+      .as[Long].collect().toSet === Set(10L, 11L, 12L))
+  }
+
   test("Dedup: banded incremental tier is precision-1, recall-pinned vs exact (real corpus)") {
     val docs01 = graft.Tables(spark, "/root/testdata/sf0.01", "documents")
     val bucket = graft.operators.Sampling.hashBucket(col("doc_id"))

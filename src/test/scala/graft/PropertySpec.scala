@@ -66,6 +66,30 @@ class PropertySpec extends AnyFunSuite {
     fps.foreach(r => assert(r.getString(0) === r.getString(1)))
   }
 
+  test("Ranking.topK ≡ sort each group by the order columns, take k (ties, nulls, small groups)") {
+    // scores from a 5-value range (ties everywhere, broken by id), one in
+    // ten null (ordered last under desc), 60 groups of ~7 rows, so k = 10
+    // exceeds most groups; its own seed leaves the shared sequence of the
+    // other properties as it was
+    val r = new Random(10)
+    val rows = (0 until 400).map { id =>
+      (r.nextInt(60), id.toLong,
+        if (r.nextInt(10) == 0) Option.empty[Int] else Some(r.nextInt(5)))
+    }
+    val df = rows.toDF("g", "id", "score")
+    for (k <- Seq(1, 2, 3, 10)) {
+      val cut = graft.fn.Ranking.topK(df, Seq(col("g")),
+        Seq(col("score").desc, col("id")), k)
+      assert(cut.schema("rank").dataType === org.apache.spark.sql.types.IntegerType)
+      val got = cut.select("g", "id", "rank").as[(Int, Long, Int)].collect().toSet
+      val want = rows.groupBy(_._1).toSeq.flatMap { case (g, rs) =>
+        rs.sortBy { case (_, id, s) => (s.isEmpty, -s.getOrElse(0), id) }.take(k)
+          .zipWithIndex.map { case ((_, id, _), i) => (g, id, i + 1) }
+      }.toSet
+      assert(got === want, s"k = $k")
+    }
+  }
+
   test("MinHashBandKeys matches the reference Scala computation") {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     val numHashes = 16

@@ -96,6 +96,24 @@ class TuningSpec extends AnyFunSuite {
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("freeCheckpoint unpersists a localCheckpoint and a pin; a lazy frame is left alone") {
+    val sc = spark.sparkContext
+    def rddId(df: org.apache.spark.sql.DataFrame): Int = df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      case p => fail(s"not a checkpoint: ${p.nodeName}")
+    }
+    val base = (1 to 200).map(i => (i.toLong % 7, i.toLong)).toDF("k", "v")
+    val local = base.repartition(2).localCheckpoint()
+    val pinned = Tuning.pinPartitioned(base.repartition(4, col("k")))
+    val ids = Seq(local, pinned).map(rddId)
+    def persisted(id: Int): Boolean = sc.getPersistentRDDs.contains(id)
+    assert(ids.forall(persisted), s"$ids not all in ${sc.getPersistentRDDs.keySet}")
+    Tuning.freeCheckpoint(base.filter(col("v") > 3)) // lazy: nothing to free
+    assert(ids.forall(persisted), "a lazy frame's free released someone's blocks")
+    Seq(local, pinned).foreach(Tuning.freeCheckpoint)
+    assert(!ids.exists(persisted), s"$ids still in ${sc.getPersistentRDDs.keySet}")
+  }
+
   test("concurrently divides the arm share; fanout/availableCores honor it") {
     assert(Tuning.currentArmShare === 1)
     val base = Tuning.availableCores(spark)
