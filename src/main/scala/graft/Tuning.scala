@@ -182,8 +182,8 @@ object Tuning {
     * plan hides the final exchange's partitioning), so the join re-shuffles
     * the pin every round anyway — verified with an executed-plan probe
     * (plans/r16/graph_lpa_round_*.txt). The checkpoint is therefore
-    * materialized with AQE off — but under a CLONED session (same
-    * SparkContext/shared state, copied SQLConf), never by flipping the
+    * materialized with AQE off — but under a cloned session
+    * ([[sessionWith]]: same SparkContext, copied SQL conf), never by flipping the
     * caller's session conf: the r16 form's non-atomic set/restore was a
     * latent race for any caller inside [[concurrently]] (another thread's
     * query planned in that window silently lost AQE, and two overlapping
@@ -201,37 +201,41 @@ object Tuning {
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.GraftInternals
     val parent = df.sparkSession
-    val child = pinSessionFor(parent)
+    val child = sessionWith(parent, Map("spark.sql.adaptive.enabled" -> "false"))
     val pinned = GraftInternals
       .ofRows(child, df.queryExecution.analyzed)
       .localCheckpoint(true, pinLevel(df))
     GraftInternals.ofRows(parent, pinned.queryExecution.analyzed)
   }
 
-  /** The AQE-off clone used by [[pinPartitioned]], cached per parent
-    * session: cloning builds a whole SessionState, which measured as
-    * ~0.2 s per call once the CC loop started pinning every round — the
-    * clone's conf never changes after creation, and concurrent actions on
-    * one session are safe, so one clone serves every pin. Keyed on the
-    * parent's current SQL conf, every entry but the AQE switch: a pin must
-    * plan as the caller's session would (shuffle partitions, broadcast
-    * threshold, codegen), so any conf change invalidates the cached clone.
-    * A clone holds its parent session, so it lives as long as its parent's
-    * JVM: one clone per session that ever pinned (in practice one per
-    * application), never collected.
+  /** A clone of `parent` (same SparkContext and shared state, copied SQL
+    * conf) with `overrides` set, cached per (parent, overrides): cloning
+    * builds a whole SessionState, which measured as ~0.2 s per call once
+    * the CC loop started pinning every round, and concurrent actions on one
+    * session are safe, so one clone serves every caller. The entry is keyed
+    * on the parent's current SQL conf minus the overridden keys: a plan
+    * handed to the clone must plan as the caller's session would (shuffle
+    * partitions, broadcast threshold, ...), so any other conf change builds
+    * a new clone. The clone's catalog is a snapshot from its creation, so
+    * callers hand it ANALYZED plans, never names to resolve. Callers:
+    * [[pinPartitioned]] (AQE off) and [[graft.serve.Engine]]'s small-plan
+    * profile. A clone holds its parent session, so it lives as long as its
+    * parent's JVM: one per (session, overrides) in use, never collected.
     */
-  private val pinSessions =
-    new java.util.IdentityHashMap[SparkSession, (Map[String, String], SparkSession)]()
-  private def pinSessionFor(parent: SparkSession): SparkSession =
-    pinSessions.synchronized {
+  private val clones = new java.util.IdentityHashMap[SparkSession,
+    scala.collection.mutable.Map[Map[String, String], (Map[String, String], SparkSession)]]()
+  private[graft] def sessionWith(parent: SparkSession,
+                                 overrides: Map[String, String]): SparkSession =
+    clones.synchronized {
       import org.apache.spark.sql.GraftInternals
-      val nowConf = parent.conf.getAll - "spark.sql.adaptive.enabled"
-      Option(pinSessions.get(parent)) match {
+      val nowConf = parent.conf.getAll -- overrides.keys
+      val ofParent = clones.computeIfAbsent(parent, _ => scala.collection.mutable.Map.empty)
+      ofParent.get(overrides) match {
         case Some((conf, child)) if conf == nowConf => child
         case _ =>
           val child = GraftInternals.cloneSession(parent)
-          child.conf.set("spark.sql.adaptive.enabled", "false")
-          pinSessions.put(parent, (nowConf, child))
+          overrides.foreach { case (k, v) => child.conf.set(k, v) }
+          ofParent(overrides) = (nowConf, child)
           child
       }
     }

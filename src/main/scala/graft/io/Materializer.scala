@@ -16,8 +16,8 @@ import graft.graph.{Bucketed, Incremental, Materialization, MergeInc, Model, Par
   *    by two or more models once per run).
   *  - every written materialization (table, partitioned, merge-incremental,
   *    incremental) → read back with the schema just written (no
-  *    schema-inference job); an incremental write infers its target's
-  *    schema once, to find the watermark.
+  *    schema-inference job); an incremental write also reads its target
+  *    with the appended frame's schema to find the watermark.
   *  - table → parquet under `warehouseDir`, `cluster_by` mapped to a
   *    rebalance on the keys, then `sortWithinPartitions(keys)` (SURVEY.md
   *    §4), so files are clustered for downstream min/max pruning — the
@@ -135,20 +135,18 @@ final class Materializer(spark: SparkSession, warehouseDir: String,
         val target = path(name)
         val tpath = new org.apache.hadoop.fs.Path(target)
         val fs = tpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val schema =
-          if (!fs.exists(tpath)) {
-            df.write.mode("overwrite").parquet(target)
-            df.schema
-          } else {
-            val existing = spark.read.parquet(target)
-            val maxWm = existing.agg(max(col(wmCol))).head.get(0)
-            val fresh =
-              if (maxWm == null) df
-              else df.filter(col(wmCol) >= lit(maxWm))
-            fresh.write.mode("append").parquet(target)
-            existing.schema
-          }
-        val back = readBack(target, "parquet", schema, Nil)
+        if (!fs.exists(tpath)) df.write.mode("overwrite").parquet(target)
+        else {
+          // the target read with the appended frame's schema: inferring
+          // it would cost a Spark job on every refresh write
+          val maxWm = readBack(target, "parquet", df.schema, Nil)
+            .agg(max(col(wmCol))).head.get(0)
+          val fresh =
+            if (maxWm == null) df
+            else df.filter(col(wmCol) >= lit(maxWm))
+          fresh.write.mode("append").parquet(target)
+        }
+        val back = readBack(target, "parquet", df.schema, Nil)
         back.createOrReplaceTempView(name)
         back
     }

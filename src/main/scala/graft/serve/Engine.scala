@@ -1,8 +1,10 @@
 package graft.serve
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Command, LogicalPlan}
+import org.apache.spark.sql.{DataFrame, GraftInternals, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, CTERelationRef, LeafNode, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.functions._
+
+import graft.Tuning
 
 /** The engine's public serving façade — the Spark analog of the reference's
   * interactive read path (SURVEY.md §3.3): table browsing with dynamic
@@ -19,6 +21,23 @@ import org.apache.spark.sql.functions._
   *    (Frontend/app.py:87,113 → S11).
   *  - `filterWidgetSpec`: dtype-driven widget inference (V4) — categorical if
   *    <15 distinct (approx), numeric → range, date/timestamp → date-range.
+  *
+  * Small plans run uncompiled. A `select`/`sql` plan whose inputs are small
+  * ([[Engine.isSmall]]) runs in one cached clone of the session
+  * ([[graft.Tuning.sessionWith]]) with whole-stage codegen, adaptive
+  * execution and expression codegen (`spark.sql.codegen.factoryMode =
+  * NO_CODEGEN`, an internal Spark conf) off: the short-query case of Kohn,
+  * Leis & Neumann, "Adaptive Execution of Compiled Queries" (ICDE 2018).
+  * A serving request changes its filter literals, and Catalyst writes
+  * number and date literals into generated source, so compiled, nearly
+  * every request paid Janino (and then the JIT) for new classes of a plan
+  * that runs once over a few thousand rows. Larger plans keep the
+  * compiled, adaptive path. What moves to the clone is the caller's
+  * ANALYZED plan: names were resolved against the caller's catalog (the
+  * clone's is a snapshot), the SELECT gate has already seen it, and the
+  * result cache keys and versions it exactly as before. A driver-local cached result comes back rooted in
+  * the caller's session; a lazy result (no cache, or the persisted tier)
+  * stays a frame of the clone, so its actions run uncompiled too.
   */
 final class Engine(spark: SparkSession, cache: Option[ResultCache] = None) {
 
@@ -42,16 +61,29 @@ final class Engine(spark: SparkSession, cache: Option[ResultCache] = None) {
     val base = table(tableName).filter(Filters.toCondition(filters))
     val ordered = if (orderBy.nonEmpty) base.orderBy(orderBy.map(col): _*) else base
     val paged = (if (offset > 0) ordered.offset(offset) else ordered).limit(limit)
-    cache.fold(paged)(_.through(paged))
+    serve(paged)
   }
 
   /** Ad-hoc gateway: SELECT-only ([[gatedSql]]), results through the cache.
     * As with [[select]], a cache miss of a small result executes the query
     * here, and the returned frame is served from the driver.
     */
-  def sql(query: String): DataFrame = {
-    val df = gatedSql(query)
-    cache.fold(df)(_.through(df))
+  def sql(query: String): DataFrame = serve(gatedSql(query))
+
+  /** `df` in its execution profile (uncompiled when small), through the
+    * cache if there is one; a driver-local result is re-rooted here.
+    */
+  private def serve(df: DataFrame): DataFrame = {
+    val profiled =
+      if (!Engine.isSmall(df)) df
+      else GraftInternals.ofRows(Tuning.sessionWith(spark, Engine.SmallPlan), df.queryExecution.analyzed)
+    cache.fold(profiled) { c =>
+      val out = c.through(profiled)
+      out.queryExecution.logical match {
+        case l: LocalRelation if out.sparkSession ne spark => GraftInternals.ofRows(spark, l)
+        case _ => out
+      }
+    }
   }
 
   /** Column lineage of an ad-hoc gateway query — the V1 SQL surface meets
@@ -112,5 +144,31 @@ final class Engine(spark: SparkSession, cache: Option[ResultCache] = None) {
         case _ => NumericRange
       })
     }.toMap
+  }
+}
+
+object Engine {
+
+  /** The small-plan profile: no whole-stage codegen, no adaptive
+    * re-planning, interpreted expressions.
+    */
+  private val SmallPlan = Map(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** Whether `df`'s leaf relations, subquery leaves included, add up to at
+    * most its session's `spark.sql.autoBroadcastJoinThreshold`: the size
+    * Spark already treats as small enough to copy into every task. A
+    * negative threshold routes nothing. Sizes are Catalyst's estimates of
+    * the analyzed plan's leaves (file bytes for a stored table), so a leaf
+    * without statistics counts as the default size and keeps the plan
+    * compiled. A CTE reference is not counted: its definition's leaves are.
+    */
+  private def isSmall(df: DataFrame): Boolean = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    threshold >= 0 && df.queryExecution.analyzed.collectWithSubqueries {
+      case l: LeafNode if !l.isInstanceOf[CTERelationRef] => l.stats.sizeInBytes
+    }.sum <= threshold
   }
 }

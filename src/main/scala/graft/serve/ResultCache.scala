@@ -8,6 +8,8 @@ import scala.concurrent.duration.Duration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftInternals}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SQLExecution
 
 /** One cached result and its creation time. The handle is one of two tiers
   * (see [[ResultCache]]): a driver-local frame over the collected rows (a
@@ -75,7 +77,8 @@ final class InMemoryCacheStore extends CacheStore {
   * size estimate (`optimizedPlan.stats.sizeInBytes`):
   *  - at or below [[ResultCache.DriverResultMaxBytes]] the query runs once,
   *    inside `through` (a normal SQL execution, so listeners see it), and its
-  *    rows are kept on the driver as a `LocalRelation`-backed frame. Reading
+  *    rows (the executed plan's `InternalRow`s, never converted to `Row`s)
+  *    are kept on the driver as a `LocalRelation`-backed frame. Reading
   *    it plans to `LocalTableScanExec` and runs no Spark job; nothing is
   *    registered with Spark's CacheManager, so other queries' planning does
   *    not match against it and dropping it costs nothing. `maxEntries`
@@ -84,6 +87,12 @@ final class InMemoryCacheStore extends CacheStore {
   *  - above the cap the result is `persist()`ed (lazily: the caller's first
   *    action fills it) and unpersisted when it leaves the cache, so a large
   *    result lives in the cluster's block managers, never on the driver.
+  *
+  * A miss runs in the session of the frame it is given. [[Engine]] hands
+  * small plans over re-rooted in its uncompiled small-plan session (see
+  * [[Engine]]): the re-rooted frame carries the caller's analyzed plan
+  * unchanged, so its key and data version are those of the caller's plan,
+  * and a result cached by either session is hit by the other.
   *
   * Entries expire `ttlSeconds` after they were created (reference TTL:
   * 3600 s). When the cache is full, a miss drops the entry created first; a
@@ -195,15 +204,20 @@ final class ResultCache(ttlSeconds: Long = 3600, maxEntries: Int = 64,
 
   /** The cached form of `df`: its rows on the driver when Catalyst sizes it
     * at or below the cap (or when it already is a local relation), else a
-    * persisted frame. The persisted frame is a new Dataset over the analyzed
-    * plan: `df`'s own plan was optimized before the persist registered, so
-    * its actions would not read the cache.
+    * persisted frame. The driver tier keeps the executed plan's collected
+    * `InternalRow`s, from one SQL execution, in a `LocalRelation` with fresh
+    * attributes: no round trip through `Row` objects (a deserializer on
+    * collect, a serializer on `createDataFrame`). The persisted frame is a
+    * new Dataset over the analyzed plan: `df`'s own plan was optimized
+    * before the persist registered, so its actions would not read the
+    * cache. Either is rooted in `df`'s session.
     */
   private def materialize(df: DataFrame): DataFrame = {
     val qe = df.queryExecution
-    if (onDriver(df) || qe.optimizedPlan.stats.sizeInBytes <= DriverResultMaxBytes)
-      df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-    else GraftInternals.ofRows(df.sparkSession, qe.analyzed).persist()
+    if (onDriver(df) || qe.optimizedPlan.stats.sizeInBytes <= DriverResultMaxBytes) {
+      val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+      GraftInternals.ofRows(df.sparkSession, LocalRelation(DataTypeUtils.toAttributes(df.schema), rows.toSeq))
+    } else GraftInternals.ofRows(df.sparkSession, qe.analyzed).persist()
   }
 
   /** A driver-local result: released with its last reference, never

@@ -9,8 +9,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *  - `SparkSession.cloneSession()` — a fork of the session (same
   *    SparkContext and shared state, COPIED SQLConf), so a conf flip scoped
   *    to one materialization can never race queries planned concurrently on
-  *    the caller's session. Caller: `graft.Tuning.pinPartitioned` (its
-  *    cached AQE-off clone).
+  *    the caller's session. Caller: `graft.Tuning.sessionWith`, the one
+  *    clone cache, keyed on (parent, overrides); through it
+  *    `graft.Tuning.pinPartitioned` (AQE off) and `graft.serve.Engine`'s
+  *    small-plan profile (codegen and AQE off).
   *  - `Dataset.ofRows(session, plan)` — turn a resolved logical plan into a
   *    `DataFrame` under a given session; it runs the usual analyzer and
   *    optimizer lazily, like any other query. Callers:
@@ -21,7 +23,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *       table's filter checks;
   *     - `graft.plans.AsOfJoinPlan`: the hand-built `GraftAsOfJoin` node;
   *     - `graft.serve.ResultCache.through`: a fresh frame over an analyzed
-  *       plan for the persisted (above-cap) tier.
+  *       plan for the persisted (above-cap) tier, and the driver tier's
+  *       `LocalRelation` over the collected `InternalRow`s;
+  *     - `graft.serve.Engine`: a small plan's analyzed plan re-rooted in
+  *       the small-plan clone, and a driver-local result re-rooted back in
+  *       the caller's session;
   *     - `graft.io.Materializer` (`Table` with `clusterBy`): the
   *       `RebalancePartitions` node with a partition count, which has no
   *       public spelling (the `rebalance` hint is dropped with AQE off).

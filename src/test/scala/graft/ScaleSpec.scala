@@ -140,7 +140,13 @@ class ScaleSpec extends AnyFunSuite {
     // the reference's `>= max` re-processes the boundary value (SURVEY §7.4#7)
     val day2 = Seq((1L, "2024-01-01"), (3L, "2024-01-02"), (4L, "2024-01-03"))
       .toDF("id", "d").withColumn("d", col("d").cast("date"))
-    mat.materialize("inc_t", day2, Incremental("d"))
+    // the second write runs the watermark aggregate and the append, and no
+    // schema-inference job over its target: one job fewer than inferring
+    val target = s"$dir/inc_t"
+    assert(TestSpark.jobsDuring(spark.read.parquet(target)) === 1, "inference runs a job")
+    val watermark = TestSpark.jobsDuring(
+      spark.read.schema(day2.schema).parquet(target).agg(max(col("d"))).head())
+    assert(TestSpark.jobsDuring(mat.materialize("inc_t", day2, Incremental("d"))) === watermark + 1)
     val rows = spark.read.parquet(s"$dir/inc_t")
     assert(rows.count() === 4) // 2 + boundary(3) + fresh(4); stale 1 filtered
     assert(rows.filter(col("id") === 1L).count() === 1)

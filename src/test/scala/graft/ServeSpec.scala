@@ -1,19 +1,20 @@
 package graft
 
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.graph.ModelGraph
+import graft.graph.{ModelGraph, Table}
 import graft.io.{Materializer, TsvReader}
-import graft.serve.{Engine, Eq, NumBetween, ResultCache}
+import graft.serve.{Engine, Eq, Filters, NumBetween, ResultCache}
 
 class ServeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -187,36 +188,6 @@ class ServeSpec extends AnyFunSuite {
     dir
   }
 
-  /** Spark jobs that `body` starts on this thread. Its jobs carry a local
-    * property; a marker job started after it reaches the listener last, so
-    * by then every job of `body` has been seen.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val probe = "graft.test.probe"
-    val jobs = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(probe))) match {
-          case Some("body") => jobs.incrementAndGet()
-          case Some("marker") => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(probe, "body")
-      try body finally sc.setLocalProperty(probe, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "the listener never saw the marker job")
-      jobs.get
-    } finally {
-      sc.setLocalProperty(probe, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("result cache: underlying-data change invalidates within TTL") {
     aboveCap(dataChangeInvalidates(persisted = true))
   }
@@ -274,7 +245,7 @@ class ServeSpec extends AnyFunSuite {
     // with a job
     val again = q
     var rows: Array[org.apache.spark.sql.Row] = null
-    assert(jobsDuring { rows = cache.through(again).collect() } === 0, "a hit ran Spark jobs")
+    assert(TestSpark.jobsDuring { rows = cache.through(again).collect() } === 0, "a hit ran Spark jobs")
     assert(cache.stats === ((1L, 1L, 1)))
     assert(rows.map(r => (r.getString(0), r.getLong(1))).toSet === Set(("x", 2L), ("y", 1L)))
     cache.clear()
@@ -296,10 +267,64 @@ class ServeSpec extends AnyFunSuite {
           case _ => false
         }, s"$model does not read parquet")
         var page: Array[org.apache.spark.sql.Row] = null
-        assert(jobsDuring {
+        assert(TestSpark.jobsDuring {
           page = e.select(model, orderBy = Seq(key), limit = 10).collect()
         } === 1, s"a miss on $model")
         assert(page.nonEmpty)
+    }
+  }
+
+  /** A stored table of a few KB, read back as the temp view `name`. */
+  private def smallStoredTable(name: String): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve-small").toString
+    new Materializer(spark, dir, 2).materialize(name,
+      (1 to 200).map(i => (i.toLong, s"c${i % 5}", i * 1.5)).toDF("id", "cat", "v"), Table())
+  }
+
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def pushedFilters(df: DataFrame): Seq[String] =
+    df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s.metadata("PushedFilters") }
+
+  test("serving: a small plan's miss compiles nothing, with the caller's pushed filters and rows") {
+    smallStoredTable("serve_small")
+    val e = new Engine(spark, Some(new ResultCache()))
+    def filters(lo: Double) = Seq(NumBetween("v", lo, lo + 100.0))
+    def page(engine: Engine, lo: Double) = engine.select("serve_small", filters(lo), orderBy = Seq("id"))
+    // the first miss compiles what reading any driver-local result of this
+    // schema needs on the caller's session; the profile compiles nothing
+    page(e, 1.5).collect()
+    val unseen = 10.0 + (System.nanoTime() % 100000) / 1000.0
+    val before = compiles
+    val rows = page(e, unseen).collect()
+    assert(compiles === before, s"a routed miss with the new literal $unseen compiled code")
+    val onCaller = spark.table("serve_small").filter(Filters.toCondition(filters(unseen)))
+      .orderBy("id").limit(e.DefaultLimit)
+    assert(rows.toSeq === onCaller.collect().toSeq)
+    assert(rows.nonEmpty)
+    // uncached, the routed frame is lazy: its scan pushes the same filters
+    val routed = page(new Engine(spark), unseen)
+    assert(pushedFilters(routed).nonEmpty)
+    assert(pushedFilters(routed) === pushedFilters(onCaller))
+  }
+
+  test("serving: with the broadcast threshold below the input size, a plan stays compiled") {
+    smallStoredTable("serve_small")
+    val e = new Engine(spark)
+    def page = e.select("serve_small", Seq(NumBetween("v", 3.0, 90.0)), orderBy = Seq("id"))
+    def compiled(df: DataFrame) = df.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
+    val routed = page
+    assert(!compiled(routed), "a small plan was compiled")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    // 100 bytes is below the table's files; a negative threshold routes nothing
+    for (threshold <- Seq("100", "-1")) {
+      spark.conf.set(key, threshold)
+      try {
+        val kept = page
+        assert(compiled(kept), s"threshold $threshold: the plan was not compiled")
+        assert(kept.collect().toSeq === routed.collect().toSeq)
+      } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }
 
@@ -419,7 +444,7 @@ class ServeSpec extends AnyFunSuite {
     assert(new java.io.File(storeDir, "k9").exists && new java.io.File(storeDir, "k9.meta").exists)
     val other = new FileCacheStore(spark, storeDir.toString)
     var prior: Option[CachedResult] = None
-    assert(jobsDuring { prior = other.remove(9L) } === 0, "remove read the entry it deletes")
+    assert(TestSpark.jobsDuring { prior = other.remove(9L) } === 0, "remove read the entry it deletes")
     assert(prior.isEmpty, "another process's entry came back as a local handle")
     assert(!new java.io.File(storeDir, "k9").exists && !new java.io.File(storeDir, "k9.meta").exists)
   }

@@ -96,6 +96,44 @@ class TuningSpec extends AnyFunSuite {
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("sessionWith: one clone per (parent, overrides), rebuilt after a parent conf change") {
+    val aqe = "spark.sql.adaptive.enabled"
+    val aqeOff = Map(aqe -> "false")
+    val interpreted = Map("spark.sql.codegen.wholeStage" -> "false")
+    val key = "spark.sql.shuffle.partitions"
+    val prior = Seq(aqe, key).map(k => k -> spark.conf.getOption(k))
+    try {
+      val a = Tuning.sessionWith(spark, aqeOff)
+      assert(Tuning.sessionWith(spark, aqeOff) eq a, "a second clone for the same overrides")
+      val b = Tuning.sessionWith(spark, interpreted)
+      assert(!(a eq b) && !(a eq spark))
+      assert(a.conf.get(aqe) === "false" && b.conf.get("spark.sql.codegen.wholeStage") === "false")
+      // a change of an overridden key leaves that clone alone, not the others
+      spark.conf.set(aqe, "false")
+      assert(Tuning.sessionWith(spark, aqeOff) eq a)
+      val b2 = Tuning.sessionWith(spark, interpreted)
+      assert(!(b2 eq b) && b2.conf.get(aqe) === "false")
+      spark.conf.set(aqe, "true")
+      spark.conf.set(key, "3")
+      val c = Tuning.sessionWith(spark, aqeOff)
+      assert(!(c eq a), "the clone outlived a parent conf change")
+      assert(c.conf.get(key) === "3" && c.conf.get(aqe) === "false")
+      // pinPartitioned plans in that clone: AQE off, so the pin records
+      // the hash partitioning it was planned with
+      val pinned = Tuning.pinPartitioned(
+        (1 to 100).map(i => (i.toLong % 7, i.toLong)).toDF("k", "v").repartition(col("k")))
+      pinned.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          assert(r.outputPartitioning.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.physical.HashPartitioning], r.outputPartitioning)
+          assert(r.outputPartitioning.numPartitions === 3)
+        case p => fail(s"not a pin: ${p.nodeName}")
+      }
+      assert(spark.conf.get(aqe) === "true")
+      Tuning.freeCheckpoint(pinned)
+    } finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("freeCheckpoint unpersists a localCheckpoint and a pin; a lazy frame is left alone") {
     val sc = spark.sparkContext
     def rddId(df: org.apache.spark.sql.DataFrame): Int = df.queryExecution.logical match {
