@@ -45,6 +45,11 @@ final case class Partitioned(partitionBy: Seq[String],
                              format: String = "parquet") extends Materialization
 /** dbt incremental: append rows where `column >= max(column)` in the sink
   * (reference: json_transform/macros/incremental_filter.sql:1-5).
+  * Precondition: every frame appended has the schema of the one that
+  * created the sink. The sink is read with the appended frame's schema
+  * (inferring the sink's would cost a Spark job per write), so a column the
+  * frame lacks is left out of the returned view, and a watermark column of
+  * another type fails the write before anything is appended (ScaleSpec).
   */
 final case class Incremental(watermarkColumn: String) extends Materialization
 /** Hash-bucketed + sorted catalog table: joins/aggregations on the bucket

@@ -17,7 +17,8 @@ import graft.graph.{Bucketed, Incremental, Materialization, MergeInc, Model, Par
   *  - every written materialization (table, partitioned, merge-incremental,
   *    incremental) → read back with the schema just written (no
   *    schema-inference job); an incremental write also reads its target
-  *    with the appended frame's schema to find the watermark.
+  *    with the appended frame's schema to find the watermark, so the frame
+  *    must have the target's schema (see [[graft.graph.Incremental]]).
   *  - table → parquet under `warehouseDir`, `cluster_by` mapped to a
   *    rebalance on the keys, then `sortWithinPartitions(keys)` (SURVEY.md
   *    §4), so files are clustered for downstream min/max pruning — the

@@ -1,7 +1,7 @@
 package graft.serve
 
 import org.apache.spark.sql.{DataFrame, GraftInternals, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Command, CTERelationRef, LeafNode, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, CTERelationRef, LeafNode, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 import graft.Tuning
@@ -35,9 +35,10 @@ import graft.Tuning
   * compiled, adaptive path. What moves to the clone is the caller's
   * ANALYZED plan: names were resolved against the caller's catalog (the
   * clone's is a snapshot), the SELECT gate has already seen it, and the
-  * result cache keys and versions it exactly as before. A driver-local cached result comes back rooted in
-  * the caller's session; a lazy result (no cache, or the persisted tier)
-  * stays a frame of the clone, so its actions run uncompiled too.
+  * result cache keys and versions it exactly as before. The frame a small
+  * plan returns, lazy or cached, is a frame of the clone, so its actions
+  * (a hit's read of driver-local rows included) run uncompiled too, and a
+  * hit reuses the cached frame's executed plan.
   */
 final class Engine(spark: SparkSession, cache: Option[ResultCache] = None) {
 
@@ -71,19 +72,13 @@ final class Engine(spark: SparkSession, cache: Option[ResultCache] = None) {
   def sql(query: String): DataFrame = serve(gatedSql(query))
 
   /** `df` in its execution profile (uncompiled when small), through the
-    * cache if there is one; a driver-local result is re-rooted here.
+    * cache if there is one.
     */
   private def serve(df: DataFrame): DataFrame = {
     val profiled =
       if (!Engine.isSmall(df)) df
       else GraftInternals.ofRows(Tuning.sessionWith(spark, Engine.SmallPlan), df.queryExecution.analyzed)
-    cache.fold(profiled) { c =>
-      val out = c.through(profiled)
-      out.queryExecution.logical match {
-        case l: LocalRelation if out.sparkSession ne spark => GraftInternals.ofRows(spark, l)
-        case _ => out
-      }
-    }
+    cache.fold(profiled)(_.through(profiled))
   }
 
   /** Column lineage of an ad-hoc gateway query — the V1 SQL surface meets
@@ -164,6 +159,10 @@ object Engine {
     * the analyzed plan's leaves (file bytes for a stored table), so a leaf
     * without statistics counts as the default size and keeps the plan
     * compiled. A CTE reference is not counted: its definition's leaves are.
+    * The cutoff is not a measured crossover: over tables of tens of MB a
+    * read can run faster compiled, most of all when its generated source
+    * does not change from one request to the next (README, "Scale design
+    * notes").
     */
   private def isSmall(df: DataFrame): Boolean = {
     val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold

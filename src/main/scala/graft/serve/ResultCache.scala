@@ -92,7 +92,9 @@ final class InMemoryCacheStore extends CacheStore {
   * small plans over re-rooted in its uncompiled small-plan session (see
   * [[Engine]]): the re-rooted frame carries the caller's analyzed plan
   * unchanged, so its key and data version are those of the caller's plan,
-  * and a result cached by either session is hit by the other.
+  * and a result cached by either session is hit by the other. A hit
+  * returns the cached frame itself, rooted in the session whose miss made
+  * it.
   *
   * Entries expire `ttlSeconds` after they were created (reference TTL:
   * 3600 s). When the cache is full, a miss drops the entry created first; a

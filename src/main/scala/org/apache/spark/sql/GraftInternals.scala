@@ -26,8 +26,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *       plan for the persisted (above-cap) tier, and the driver tier's
   *       `LocalRelation` over the collected `InternalRow`s;
   *     - `graft.serve.Engine`: a small plan's analyzed plan re-rooted in
-  *       the small-plan clone, and a driver-local result re-rooted back in
-  *       the caller's session;
+  *       the small-plan clone;
   *     - `graft.io.Materializer` (`Table` with `clusterBy`): the
   *       `RebalancePartitions` node with a partition count, which has no
   *       public spelling (the `rebalance` hint is dropped with AQE off).

@@ -152,6 +152,28 @@ class ScaleSpec extends AnyFunSuite {
     assert(rows.filter(col("id") === 1L).count() === 1)
   }
 
+  test("incremental materialization reads its target with the frame's schema") {
+    val dir = java.nio.file.Files.createTempDirectory("inc-schema").toString
+    val mat = new Materializer(spark, dir)
+    val target = s"$dir/inc_s"
+    mat.materialize("inc_s", Seq((1L, "2024-01-01", "a")).toDF("id", "d", "extra")
+      .withColumn("d", col("d").cast("date")), Incremental("d"))
+    // a frame without `extra`: the rows are appended, the view has the
+    // frame's columns, and the first write's files keep `extra`
+    val narrow = mat.materialize("inc_s", Seq((2L, "2024-01-02")).toDF("id", "d")
+      .withColumn("d", col("d").cast("date")), Incremental("d"))
+    assert(narrow.columns.toSeq === Seq("id", "d"))
+    assert(spark.table("inc_s").columns.toSeq === Seq("id", "d"))
+    assert(narrow.count() === 2)
+    assert(spark.read.parquet(target).filter(col("extra") === "a").count() === 1)
+    // a watermark column of another type fails the watermark read, before
+    // the append: the target keeps its rows
+    intercept[org.apache.spark.SparkException] {
+      mat.materialize("inc_s", Seq((3L, "2024-01-03")).toDF("id", "d"), Incremental("d"))
+    }
+    assert(spark.read.parquet(target).count() === 2)
+  }
+
   test("minhash LSH plan carries no broadcast hints (shingle corpus must scale)") {
     // the verification joins are doc_id equi-joins; a hard broadcast() hint
     // on the shingle side re-imports the memory bound LSH exists to escape.

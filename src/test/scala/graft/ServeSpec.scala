@@ -291,13 +291,15 @@ class ServeSpec extends AnyFunSuite {
     val e = new Engine(spark, Some(new ResultCache()))
     def filters(lo: Double) = Seq(NumBetween("v", lo, lo + 100.0))
     def page(engine: Engine, lo: Double) = engine.select("serve_small", filters(lo), orderBy = Seq("id"))
-    // the first miss compiles what reading any driver-local result of this
-    // schema needs on the caller's session; the profile compiles nothing
+    // a first miss over the table, so the routed one below differs from it
+    // only by its literal
     page(e, 1.5).collect()
     val unseen = 10.0 + (System.nanoTime() % 100000) / 1000.0
     val before = compiles
     val rows = page(e, unseen).collect()
     assert(compiles === before, s"a routed miss with the new literal $unseen compiled code")
+    assert(page(e, unseen).collect().toSeq === rows.toSeq)
+    assert(compiles === before, "a routed hit compiled code")
     val onCaller = spark.table("serve_small").filter(Filters.toCondition(filters(unseen)))
       .orderBy("id").limit(e.DefaultLimit)
     assert(rows.toSeq === onCaller.collect().toSeq)
